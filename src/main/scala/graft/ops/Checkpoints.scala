@@ -1,6 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import scala.concurrent.Await
+import scala.concurrent.duration._
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Lineage cut for iterative DataFrame loops (BFS, shortest paths, star
   * contraction, k-core, PageRank/HITS power iterations). Every round of
@@ -38,6 +41,11 @@ import org.apache.spark.sql.DataFrame
   * Accumulating loops (BFS's per-level union) hold references to every
   * level in the result plan by design — those files live until the
   * result is consumed, which is exactly as long as they are needed.
+  *
+  * OBSERVED CUTS: a loop that cuts its state and then sizes it (a
+  * convergence test, a broadcast-hint switch) would pay a second job
+  * that re-reads the cut. [[cutObserved]] attaches the metrics to the
+  * cut's own job with `Dataset.observe`, so the size costs nothing.
   */
 object Checkpoints {
 
@@ -68,4 +76,30 @@ object Checkpoints {
       case None => df.localCheckpoint()
     }
   }
+
+  /** [[cut]] with `metrics` observed on the cut's own job: returns the cut
+    * frame and the metrics row, with no second job to size the state.
+    *
+    * The observation sits at the TOP of the plan, so it aggregates in the
+    * result stage — a retried map task cannot count its rows twice. In
+    * reliable mode the persisted plan keeps the observation, and the
+    * checkpoint action reports it like the local one does. The row comes
+    * from the listener bus after the action returns; the bounded wait
+    * turns a cut that ever stops reporting metrics into an error instead
+    * of a hang.
+    */
+  def cutObserved(df: DataFrame, metric: Column, metrics: Column*)
+      : (DataFrame, Row) = {
+    val obs = Observation()
+    val out = cut(df.observe(obs, metric, metrics: _*))
+    (out, Await.result(obs.future, ObserveTimeout))
+  }
+
+  /** [[cutObserved]] with the row count as its one metric. */
+  def cutCounted(df: DataFrame): (DataFrame, Long) = {
+    val (out, r) = cutObserved(df, count(lit(1)).as("rows"))
+    (out, r.getLong(0))
+  }
+
+  private val ObserveTimeout = 5.minutes
 }

@@ -885,7 +885,9 @@ object Graphs {
     * the Catalyst-native twin of [[connectedComponents]] (GraphOpsSpec
     * asserts they agree). Converges in O(log n) rounds rather than
     * O(diameter) supersteps, entirely in Tungsten: each star op is ONE
-    * window-min shuffle (no arrays, no collect_set) + a distinct.
+    * window-min shuffle over one read of its input (no collect_set), and
+    * each two-round step is one lineage cut whose job also reports the
+    * convergence signature — one job per step.
     *
     * large-star: every node's strictly-larger neighbors re-point to the
     * minimum of its closed neighborhood; small-star: smaller-or-equal
@@ -903,11 +905,18 @@ object Graphs {
       maxRounds: Int = 50): DataFrame = {
     import org.apache.spark.sql.expressions.Window
 
+    // Each star op reads its input ONCE: both arc directions (largeStar)
+    // and both output arcs (smallStar) come out of one row through
+    // inline(array(struct…)). A self-unionAll would read the input twice
+    // per op, so the composed two-round plan below would hold 16 copies
+    // of its leaf; with inline it holds one, and the arc multisets are
+    // the same.
     def largeStar(e: DataFrame): DataFrame = {
       // symmetric arcs so Γ(u) is the full neighborhood. No distinct on
       // the output: duplicate (v, m) arcs from different groups don't
       // perturb the next window-min, and smallStar dedups once per round.
-      val arcs = e.unionAll(e.select(col("dst").as("src"), col("src").as("dst")))
+      val arcs = e.select(inline(array(struct(col("src"), col("dst")),
+        struct(col("dst").as("src"), col("src").as("dst")))))
       val w = arcs.withColumn("m",
         least(min(col("dst")).over(Window.partitionBy("src")), col("src")))
       w.filter(col("dst") > col("src"))
@@ -921,9 +930,11 @@ object Graphs {
         least(col("src"), col("dst")).as("dst"))
       val w = canon.withColumn("m",
         min(col("dst")).over(Window.partitionBy("src")))
-      val out = w.filter(col("dst") =!= col("m"))
-        .select(col("dst").as("src"), col("m").as("dst"))
-        .unionAll(w.select(col("src"), col("m").as("dst")))
+      // (dst -> m) for every non-minimum neighbor, (src -> m) for the
+      // node itself; the self-loop filter drops dst == m and src == m
+      val out = w.select(inline(array(
+          struct(col("dst").as("src"), col("m").as("dst")),
+          struct(col("src"), col("m").as("dst")))))
         .filter(col("src") =!= col("dst"))
       // duplicate arcs never perturb a window-min, so dedup is a size
       // bound, not a correctness step — pay its shuffle once per BATCH
@@ -931,35 +942,36 @@ object Graphs {
       if (dedup) out.distinct() else out
     }
 
-    def sig(e: DataFrame): (Long, Long) = {
-      // bit_xor, not sum: ANSI mode makes a long sum of hashes overflow
-      val r = e.agg(count(lit(1)),
-        coalesce(bit_xor(xxhash64(col("src"), col("dst"))), lit(0L))).head()
-      (r.getLong(0), r.getLong(1))
+    // cut + (count, xor-hash) signature, observed on the cut's own job.
+    // bit_xor, not sum: ANSI mode makes a long sum of hashes overflow
+    def cutSig(df: DataFrame): (DataFrame, (Long, Long)) = {
+      val (out, r) = Checkpoints.cutObserved(df, count(lit(1)).as("n"),
+        coalesce(bit_xor(xxhash64(col("src"), col("dst"))), lit(0L))
+          .as("h"))
+      (out, (r.getLong(0), r.getLong(1)))
     }
 
-    var e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .filter(col("src") =!= col("dst")).distinct().transform(Checkpoints.cut)
+    var (e, last) = cutSig(
+      edges.select(col("src").cast("long"), col("dst").cast("long"))
+        .filter(col("src") =!= col("dst")).distinct())
     // derive the vertex set from the checkpointed edges, not the source
     // plan — otherwise the (possibly expensive) edge derivation runs twice
     val verts = e.select(col("src").as("id"))
       .unionAll(e.select(col("dst").as("id")))
       .distinct().transform(Checkpoints.cut)
-    var last = sig(e)
     var round = 0
     var done = false
     while (round < maxRounds && !done) {
-      // TWO composed contraction rounds per materialization+signature
-      // check (ROADMAP 3): the fixed point is stable under extra rounds,
-      // so batching halves the checkpoint and signature jobs — the
-      // per-round job-launch overhead that dominates at small SF —
-      // without changing the result. Convergence typically needs
-      // O(log n) rounds, so the at-most-one wasted extra round is noise.
+      // TWO composed contraction rounds per materialization (ROADMAP 3):
+      // the fixed point is stable under extra rounds, so batching halves
+      // the checkpoint jobs — the per-round job-launch overhead that
+      // dominates at small SF — without changing the result. Convergence
+      // typically needs O(log n) rounds, so the at-most-one wasted extra
+      // round is noise. Each materialization is ONE job: the signature
+      // is observed on the cut, not read by a second aggregate job.
       round += 2
-      val next = smallStar(largeStar(
-          smallStar(largeStar(e), dedup = false)), dedup = true)
-        .transform(Checkpoints.cut)
-      val cur = sig(next)
+      val (next, cur) = cutSig(smallStar(largeStar(
+          smallStar(largeStar(e), dedup = false)), dedup = true))
       done = cur == last
       last = cur
       e = next

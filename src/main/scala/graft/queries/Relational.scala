@@ -182,8 +182,9 @@ object Relational {
     // terminal sort's OrderedDistribution(key, …), so the sort becomes a
     // partition-local sort with NO second exchange and the sampling scans
     // the raw input, not the window output. One exchange, same rows, same
-    // total order (oracle hashes unchanged). Interleaved A/B (ProfileR20):
-    // q11 0.269 → 0.213 s, t06 0.254 → 0.203 s; plan 2 Exchange → 1.
+    // total order (oracle hashes unchanged). Interleaved A/B
+    // (OPTIMIZATION_r20.md): q11 0.269 → 0.213 s, t06 0.254 → 0.203 s;
+    // plan 2 Exchange → 1.
     "q11_window_rank" -> ((s, dir) => {
       val w = Window.partitionBy("o_custkey")
         .orderBy(col("o_orderdate").desc, col("o_orderkey").asc)

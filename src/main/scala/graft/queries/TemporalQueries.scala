@@ -1116,7 +1116,8 @@ object TemporalQueries {
     // front — the sessionize windows cluster on it and the terminal
     // orderBy(user_id, session_start) is satisfied by the prefix rule, so
     // the plan drops from 2 Exchanges (hash + sampled range) to 1.
-    // ProfileR20: 0.254 → 0.203 s; rows and total order unchanged.
+    // Interleaved A/B (OPTIMIZATION_r20.md): 0.254 → 0.203 s; rows and
+    // total order unchanged.
     "t06_sessionize" -> ((s, dir) => {
       Temporal.sessionize(
           ev(s, dir).repartitionByRange(col("user_id")),

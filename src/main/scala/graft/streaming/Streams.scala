@@ -411,14 +411,20 @@ object Streams {
   /** [[ccApplyBatch]] WITHOUT the terminal lineage cut — exposed so the
     * plan-shape gate (StreamingSpec) can assert the relabel read's
     * Exchange budget on the pre-cut plan; production callers use
-    * [[ccApplyBatch]].
+    * [[ccApplyBatch]]. The batch-sized intermediates (batch nodes, their
+    * known labels, the quotient edges) are still cut eagerly here, each
+    * once, and their sizes are observed on those cuts' jobs: a batch
+    * that merges nothing runs no count or emptiness job of its own.
     */
   private[graft] def ccApplyBatchPlan(s: org.apache.spark.sql.SparkSession,
       labels: DataFrame, edges: DataFrame): DataFrame = {
     val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .filter(col("src") =!= col("dst"))
-    val nodes = e.select(col("src").as("id"))
-      .unionAll(e.select(col("dst").as("id"))).distinct()
+    // cut once: the distinct runs in the cut's job, which also reports
+    // the row count the broadcast hints key on — no separate count job
+    val (nodes, nodeRows) = graft.ops.Checkpoints.cutCounted(
+      e.select(col("src").as("id"))
+        .unionAll(e.select(col("dst").as("id"))).distinct())
     // r20 (guide §2.4 / VERDICT r19 #3): the old `nodes LEFT JOIN labels`
     // + `lab ANTI labels` pair planned as sort-merge joins that SHUFFLED
     // the accumulated label table twice per batch — per-batch cost
@@ -431,7 +437,6 @@ object Streams {
     //            the one remaining labels scan);
     //   newIds = batch ids not yet labeled, self-labeled — exactly the
     //            rows the old coalesce() + anti join produced.
-    val nodeRows = nodes.count()
     def hint(df: DataFrame): DataFrame =
       if (nodeRows <= graft.ops.Graphs.FrontierBroadcastRows) broadcast(df)
       else df
@@ -447,9 +452,13 @@ object Streams {
         "dst")
       .select(col("c1").as("src"), col("c2").as("dst"))
       .filter(col("src") =!= col("dst"))
+    // cut with its count observed: an empty quotient (the batch merges
+    // nothing) is known from the cut's own job, and the CC reads the cut
+    // instead of re-running both relabel joins
+    val (superCut, superRows) = graft.ops.Checkpoints.cutCounted(superEdges)
     val remap =
-      if (superEdges.isEmpty) null
-      else graft.ops.Graphs.connectedComponentsDF(s, superEdges)
+      if (superRows == 0L) null
+      else graft.ops.Graphs.connectedComponentsDF(s, superCut)
         .filter(col("id") =!= col("component"))
         .select(col("id").as("component"), col("component").as("__new"))
     val all = labels.unionByName(newIds)
@@ -495,9 +504,9 @@ object Streams {
   def ccApplyDelta(s: org.apache.spark.sql.SparkSession, labels: DataFrame,
       liveEdges: DataFrame, inserts: DataFrame, deletes: DataFrame)
       : (DataFrame, DataFrame) = {
-    val del = deletes.select(col("src").cast("long"), col("dst").cast("long"))
-      .distinct().transform(graft.ops.Checkpoints.cut)
-    val delRows = del.count()
+    val (del, delRows) = graft.ops.Checkpoints.cutCounted(
+      deletes.select(col("src").cast("long"), col("dst").cast("long"))
+        .distinct())
     // adaptive hint (the bfsDepthsDF discipline): the delete batch and
     // everything derived from it (endpoints, touched component ids) are
     // batch-sized — broadcast them against the accumulated tables when
@@ -687,10 +696,10 @@ object Streams {
       bands: Int, estMin: Double, jacMin: Double, maxBucket: Int)
       : (NearDupState, DataFrame) = {
     import graft.ops.{Checkpoints, Similarity, Text}
-    val fresh = nearDupDocs(batch).distinct()
-      .join(st.docs.select("doc_id"), Seq("doc_id"), "left_anti")
-      .transform(Checkpoints.cut)
-    if (fresh.isEmpty) return (st, null)
+    val (fresh, freshRows) = Checkpoints.cutCounted(
+      nearDupDocs(batch).distinct()
+        .join(st.docs.select("doc_id"), Seq("doc_id"), "left_anti"))
+    if (freshRows == 0L) return (st, null)
     // distinct() above collapses exact intra-batch replays of a row;
     // what survives with a repeated doc_id is CONFLICTING content for
     // one id in one batch — shingling would silently union both texts
@@ -746,13 +755,12 @@ object Streams {
   def nearDupApplyDelete(s: org.apache.spark.sql.SparkSession,
       st: NearDupState, delDocs: DataFrame): NearDupState = {
     import graft.ops.Checkpoints
-    val ids = delDocs.select(col("doc_id").cast("long").as("doc_id"))
-      .distinct().transform(Checkpoints.cut)
     // adaptive hint (the ccApplyDelta discipline): the delete-id probe
     // is batch-sized while st.edges is the accumulated, stats-less
     // checkpointed edge set — broadcast the probe so neither incident
     // scan reshuffles the full edge set
-    val idRows = ids.count()
+    val (ids, idRows) = Checkpoints.cutCounted(
+      delDocs.select(col("doc_id").cast("long").as("doc_id")).distinct())
     def hint(df: DataFrame): DataFrame =
       if (idRows <= graft.ops.Graphs.FrontierBroadcastRows) broadcast(df)
       else df
@@ -854,9 +862,9 @@ object Streams {
     // fold — review r19)
     val rows = batch.select(col("vec_id").cast("long").as("vec_id"),
       col("embedding")).distinct()
-    val fresh = rows.join(st.seen, Seq("vec_id"), "left_anti")
-      .transform(Checkpoints.cut)
-    if (fresh.isEmpty) return (st, null)
+    val (fresh, freshRows) = Checkpoints.cutCounted(
+      rows.join(st.seen, Seq("vec_id"), "left_anti"))
+    if (freshRows == 0L) return (st, null)
     // what survives with a repeated vec_id is CONFLICTING content for
     // one id in one batch — fail loudly (the s45/requireUniqueIds
     // discipline) before anything touches the index
@@ -903,13 +911,12 @@ object Streams {
     SimIndex.refreshIndex(s, prefix)
     SimIndex.deleteFromIvfIndex(delVecs, prefix)
     SimIndex.refreshIndex(s, prefix)
-    val ids = delVecs.select(col("vec_id").cast("long").as("vec_id"))
-      .distinct().transform(Checkpoints.cut)
     // adaptive hint (the ccApplyDelta discipline): the delete-id probe
     // is batch-sized while st.edges is the accumulated, stats-less
     // checkpointed edge set — broadcast the probe so neither incident
     // scan reshuffles the full edge set
-    val idRows = ids.count()
+    val (ids, idRows) = Checkpoints.cutCounted(
+      delVecs.select(col("vec_id").cast("long").as("vec_id")).distinct())
     def hint(df: DataFrame): DataFrame =
       if (idRows <= graft.ops.Graphs.FrontierBroadcastRows) broadcast(df)
       else df
@@ -1012,10 +1019,10 @@ object Streams {
         .transform(Checkpoints.cut),
       bands = st.text.bands.join(dIds, Seq("doc_id"), "left_anti")
         .transform(Checkpoints.cut))
-    val ids = dIds.select(col("doc_id").as("id"))
-      .unionByName(delVecs.select(col("vec_id").cast("long").as("id")))
-      .distinct().transform(Checkpoints.cut)
-    val idRows = ids.count()
+    val (ids, idRows) = Checkpoints.cutCounted(
+      dIds.select(col("doc_id").as("id"))
+        .unionByName(delVecs.select(col("vec_id").cast("long").as("id")))
+        .distinct())
     def hint(df: DataFrame): DataFrame =
       if (idRows <= graft.ops.Graphs.FrontierBroadcastRows) broadcast(df)
       else df
@@ -1129,17 +1136,15 @@ object Streams {
     def canon(df: DataFrame): DataFrame =
       df.select(col("x").cast("long").as("x"), col("y").cast("long").as("y"))
         .filter(col("x") < col("y")).distinct()
-    val del = canon(deletes).join(st.edges, Seq("x", "y"), "left_semi")
-      .transform(Checkpoints.cut)
-    val delRows = del.count()
+    val (del, delRows) = Checkpoints.cutCounted(
+      canon(deletes).join(st.edges, Seq("x", "y"), "left_semi"))
     val (kept, lost) = if (delRows == 0L) (st.edges, None) else (
       st.edges.join(del, Seq("x", "y"), "left_anti")
         .transform(Checkpoints.cut),
       Some(triCorners(touchedTriangles(st.edges, del, delRows))
         .select(col("id"), (-col("d")).as("d"))))
-    val fresh = canon(inserts).join(kept, Seq("x", "y"), "left_anti")
-      .transform(Checkpoints.cut)
-    val freshRows = fresh.count()
+    val (fresh, freshRows) = Checkpoints.cutCounted(
+      canon(inserts).join(kept, Seq("x", "y"), "left_anti"))
     if (delRows == 0L && freshRows == 0L) return st
     val edges = if (freshRows == 0L) kept
       else kept.unionByName(fresh).transform(Checkpoints.cut)
@@ -1235,14 +1240,12 @@ object Streams {
   def restlessApplyBatch(s: org.apache.spark.sql.SparkSession,
       labels: DataFrame, liveEdges: DataFrame, newEdges: DataFrame,
       deltaUs: Long, maxHops: Int): (DataFrame, DataFrame) = {
-    val eNew = newEdges.select(col("src").cast("long"),
-        col("dst").cast("long"), col("dep_us").cast("long"),
-        col("arr_us").cast("long")).distinct()
-      .transform(graft.ops.Checkpoints.cut)
-    val live = liveEdges.unionByName(eNew).distinct()
-      .transform(graft.ops.Checkpoints.cut)
-    val liveRows = live.count()
-    val cand = restlessExpand(labels, labels.count(), eNew, eNew.count(),
+    val (eNew, eNewRows) = graft.ops.Checkpoints.cutCounted(
+      newEdges.select(col("src").cast("long"), col("dst").cast("long"),
+        col("dep_us").cast("long"), col("arr_us").cast("long")).distinct())
+    val (live, liveRows) = graft.ops.Checkpoints.cutCounted(
+      liveEdges.unionByName(eNew).distinct())
+    val cand = restlessExpand(labels, labels.count(), eNew, eNewRows,
       deltaUs, maxHops)
     (restlessDrain(labels, cand, live, liveRows, deltaUs, maxHops), live)
   }
@@ -1292,13 +1295,11 @@ object Streams {
       round += 1
       if (round > maxHops) throw new IllegalStateException(
         s"restless cascade not drained after $maxHops rounds")
-      val improved = cand
+      val (improved, improvedRows) = graft.ops.Checkpoints.cutCounted(cand
         .join(lab.select(col("id"), col("arr_us"),
           col("dmin").as("d_old")), Seq("id", "arr_us"), "left_outer")
         .filter(col("d_old").isNull || col("dmin") < col("d_old"))
-        .select(col("id"), col("arr_us"), col("dmin"))
-        .transform(graft.ops.Checkpoints.cut)
-      val improvedRows = improved.count()
+        .select(col("id"), col("arr_us"), col("dmin")))
       more = improvedRows > 0
       if (more) {
         lab = lab.unionByName(improved).groupBy("id", "arr_us")
@@ -1353,11 +1354,10 @@ object Streams {
       labels: DataFrame, liveEdges: DataFrame, insEdges: DataFrame,
       delEdges: DataFrame, seeds: DataFrame, deltaUs: Long,
       maxHops: Int): (DataFrame, DataFrame) = {
-    val dels = delEdges.select(col("src").cast("long"),
-        col("dst").cast("long"), col("dep_us").cast("long"),
-        col("arr_us").cast("long")).distinct()
-      .transform(graft.ops.Checkpoints.cut)
-    if (dels.isEmpty) {
+    val (dels, delRows) = graft.ops.Checkpoints.cutCounted(
+      delEdges.select(col("src").cast("long"), col("dst").cast("long"),
+        col("dep_us").cast("long"), col("arr_us").cast("long")).distinct())
+    if (delRows == 0L) {
       restlessApplyBatch(s, labels, liveEdges, insEdges, deltaUs, maxHops)
     } else {
       val bcastRows = graft.ops.Graphs.FrontierBroadcastRows
@@ -1371,20 +1371,18 @@ object Streams {
       // re-derives its labels because the edge stays live. (The taint
       // still roots at the deleted edge's (dst, arr) label; over-taint
       // is safe, the refold restores anything still reachable.)
-      val live = liveEdges
+      val (live, liveRows) = graft.ops.Checkpoints.cutCounted(liveEdges
         .join(dels, Seq("src", "dst", "dep_us", "arr_us"), "left_anti")
-        .unionByName(eNew).distinct()
-        .transform(graft.ops.Checkpoints.cut)
-      val liveRows = live.count()
+        .unionByName(eNew).distinct())
       // 1. taint: roots at the deleted edges' (dst, arr) labels, then
       // the forward closure over existing labels through live edges
-      var taint = labels
+      val (roots, rootRows) = graft.ops.Checkpoints.cutCounted(labels
         .join(dels.select(col("dst").as("id"), col("arr_us")).distinct(),
           Seq("id", "arr_us"), "left_semi")
-        .select("id", "arr_us")
-        .transform(graft.ops.Checkpoints.cut)
-      var frontier = taint
-      var frontierRows = frontier.count()
+        .select("id", "arr_us"))
+      var taint = roots
+      var frontier = roots
+      var frontierRows = rootRows
       var round = 0
       while (frontierRows > 0 && round < maxHops) {
         round += 1
@@ -1395,11 +1393,11 @@ object Streams {
           .filter(col("dep_us") >= col("f_arr") &&
             col("dep_us") <= col("f_arr") + deltaUs)
           .select(col("dst").as("id"), col("arr_us")).distinct()
-        frontier = stepped
+        val (next, nextRows) = graft.ops.Checkpoints.cutCounted(stepped
           .join(labels, Seq("id", "arr_us"), "left_semi")
-          .join(taint, Seq("id", "arr_us"), "left_anti")
-          .transform(graft.ops.Checkpoints.cut)
-        frontierRows = frontier.count()
+          .join(taint, Seq("id", "arr_us"), "left_anti"))
+        frontier = next
+        frontierRows = nextRows
         if (frontierRows > 0)
           taint = taint.unionByName(frontier)
             .transform(graft.ops.Checkpoints.cut)
@@ -1408,13 +1406,11 @@ object Streams {
       val seedLab = seeds.select(col("id").cast("long"),
           col("arr_us").cast("long"))
         .withColumn("dmin", lit(1))
-      val survivors = labels
-        .join(taint, Seq("id", "arr_us"), "left_anti")
-        .unionByName(seedLab)
-        .groupBy("id", "arr_us").agg(min("dmin").as("dmin"))
-        .transform(graft.ops.Checkpoints.cut)
+      val (survivors, survivorRows) = graft.ops.Checkpoints.cutCounted(
+        labels.join(taint, Seq("id", "arr_us"), "left_anti")
+          .unionByName(seedLab)
+          .groupBy("id", "arr_us").agg(min("dmin").as("dmin")))
       // 3. refold from the survivors through the surviving edges
-      val survivorRows = survivors.count()
       val cand = restlessExpand(survivors, survivorRows, live, liveRows,
         deltaUs, maxHops)
       (restlessDrain(survivors, cand, live, liveRows, deltaUs, maxHops),

@@ -252,9 +252,27 @@ class GraphOpsSpec extends SparkSpecBase {
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     def cc() = Graphs.connectedComponentsDF(spark, edges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // the maintained folds, whose cuts report their sizes through an
+    // Observation: an insert fold, then a delta that retracts the (2,3)
+    // bridge and links 4 to the other component
+    def snap(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def folds() = {
+      val ins = graft.streaming.Streams.ccApplyBatch(spark,
+        Seq.empty[(Long, Long)].toDF("id", "component"), edges)
+      val (lab, live) = graft.streaming.Streams.ccApplyDelta(spark, ins,
+        edges.transform(Checkpoints.cut), Seq((4L, 10L)).toDF("src", "dst"),
+        Seq((2L, 3L), (3L, 2L)).toDF("src", "dst"))
+      (snap(ins), snap(lab), live.collect().map(r => (r.getLong(0),
+        r.getLong(1))).toSet)
+    }
     val bfsLocal = bfs()
     val ccLocal = cc()
+    val foldsLocal = folds()
     assert(bfsLocal == Map(1L -> 0, 2L -> 1, 3L -> 2, 4L -> 3))
+    assert(foldsLocal._1 == ccLocal)
+    assert(foldsLocal._2 == Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 3L,
+      10L -> 3L, 11L -> 3L, 12L -> 3L))
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toFile
     spark.conf.set(Checkpoints.CONF, dir.getAbsolutePath)
     try {
@@ -271,6 +289,7 @@ class GraphOpsSpec extends SparkSpecBase {
       assert(bfsRel.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
         == bfsLocal)
       assert(cc() == ccLocal)
+      assert(folds() == foldsLocal)
       // ... and the checkpoint dir actually holds RDD state on disk
       val ckptRoot = new java.io.File(java.net.URI.create(
         spark.sparkContext.getCheckpointDir.get).getPath)
@@ -281,6 +300,29 @@ class GraphOpsSpec extends SparkSpecBase {
     } finally spark.conf.unset(Checkpoints.CONF)
     // back in default mode: same results, no conf leakage
     assert(bfs() == bfsLocal)
+  }
+
+  test("connectedComponentsDF job gate: each materialization is ONE cut " +
+      "job — the convergence signature runs no job of its own") {
+    import spark.implicits._
+    // a 64-vertex path takes several two-round steps to contract
+    val edges = (1L until 64L).map(i => (i, i + 1)).toDF("src", "dst")
+    val (labels, jobs) = jobSites(
+      Graphs.connectedComponentsDF(spark, edges).collect())
+    val byAction = jobs.groupBy(_._2).values.map(js => js.head._1 -> js.length)
+      .toSeq
+    val (cuts, rest) = byAction.partition(
+      _._1.startsWith("localCheckpoint at Checkpoints.scala:"))
+    // the edge cut, the vertex cut, then one cut per two-round step —
+    // and each cut is a single job
+    assert(cuts.length >= 4 && cuts.forall(_._2 == 1), jobs)
+    // besides the cuts only the two star-forest checks run (no signature
+    // job), and then the spec's own collect of the labels
+    assert(rest.map(_._1).filterNot(_.startsWith("collect at GraphOpsSpec"))
+      .sorted.map(_.takeWhile(_ != ':')) ==
+      Seq("count at Graphs.scala", "count at Graphs.scala"), jobs)
+    assert(labels.map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      (1L to 64L).map(_ -> 1L).toMap)
   }
 
   test("pathCountBfs: counts == shortest-path enumeration (hand + random)") {

@@ -35,6 +35,52 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
     spark.conf.set(key, "-1")
     try f finally spark.conf.set(key, prev)
   }
+  /** Evaluate `f` and return every job it ran, in job order, as (call
+    * site of the action the job serves, SQL execution id or -1). The
+    * site is the one the action's SQL execution recorded, e.g.
+    * `localCheckpoint at Checkpoints.scala:76`, so a broadcast build that
+    * runs on a helper thread counts for the action that needed it. AQE is
+    * off inside `f` (as in the bench sessions): under AQE every shuffle
+    * stage is its own job, so one action would show as several.
+    */
+  def jobSites[T](f: => T): (T, Seq[(String, Long)]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+      SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val jobs = new java.util.concurrent.ConcurrentSkipListMap[Int, (String, Long)]()
+    val actions = new java.util.concurrent.ConcurrentHashMap[Long, String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val exec = Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .map(_.toLong).getOrElse(-1L)
+        jobs.put(e.jobId,
+          (e.stageInfos.maxBy(_.stageId).name.takeWhile(_ != '\n'), exec))
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart =>
+          actions.put(x.executionId, x.description)
+        case _ =>
+      }
+    }
+    val key = "spark.sql.adaptive.enabled"
+    val prev = spark.conf.get(key)
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerDrain.drain(sc)
+    sc.addSparkListener(listener)
+    spark.conf.set(key, "false")
+    try {
+      val out = f
+      org.apache.spark.ListenerDrain.drain(sc)
+      import scala.jdk.CollectionConverters._
+      (out, jobs.values.asScala.toSeq.map { case (stage, exec) =>
+        (Option(actions.get(exec)).getOrElse(stage), exec) })
+    } finally {
+      spark.conf.set(key, prev)
+      sc.removeSparkListener(listener)
+    }
+  }
+
   val sfDir = "/root/testdata/sf0.001"
 
   lazy val spark: SparkSession = SparkSession.builder()

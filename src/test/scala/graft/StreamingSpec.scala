@@ -1419,6 +1419,56 @@ class StreamingSpec extends SparkSpecBase {
       s"recall ${maintained.size}/${exact.size} below 0.9")
   }
 
+  test("quotient-CC merge job gate: a batch that merges nothing runs only " +
+      "lineage cuts — no count or isEmpty job from Streams") {
+    import spark.implicits._
+    val labels = (0L until 500L).map(i => (i, i / 5 * 5)).toDF("id", "component")
+      .transform(graft.ops.Checkpoints.cut)
+    // every edge lies inside an existing component: nothing merges, so
+    // the quotient edge list is empty and no CC runs
+    val batch = Seq((1L, 2L), (6L, 9L), (14L, 10L)).toDF("src", "dst")
+    val (out, jobs) = jobSites(Streams.ccApplyBatch(spark, labels, batch))
+    val sites = jobs.map(_._1)
+    assert(!sites.exists(_.matches("(count|isEmpty) at Streams\\.scala:.*")),
+      sites)
+    // the batch sizes come from the cuts' own jobs: every job serves a cut
+    // (its own, or the broadcast build of a batch-side probe)
+    assert(sites.nonEmpty && sites.forall(_.contains(" at Checkpoints.scala:")),
+      sites)
+    assert(out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      (0L until 500L).map(i => i -> i / 5 * 5).toMap)
+  }
+
+  test("S27b deltas drawn from the live frame: inserts and deletes that " +
+      "are filters of the checkpointed frame the live edges came from") {
+    import spark.implicits._
+    def cc(edges: Seq[(Long, Long)]) =
+      graft.ops.Graphs.connectedComponentsDF(spark, edges.toDF("src", "dst"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // a binary tree on 1..15 in both directions, tagged by a slice: the
+    // live state holds slice 0, the batch re-inserts slice 1 and retracts
+    // the edges at vertices 2 and 3 (bridges — the tree splits)
+    val tree = (2L to 15L).flatMap(v => Seq((v, v / 2), (v / 2, v)))
+    val tagged = tree.map { case (a, b) => (a, b, if (a.max(b) >= 12) 1 else 0) }
+      .toDF("src", "dst", "slice").transform(graft.ops.Checkpoints.cut)
+    val live = tagged.filter(col("slice") === 0).select("src", "dst")
+      .transform(graft.ops.Checkpoints.cut)
+    val initial = tree.filter { case (a, b) => a.max(b) < 12 }
+    val labels = graft.ops.Graphs.connectedComponentsDF(spark,
+      initial.toDF("src", "dst")).transform(graft.ops.Checkpoints.cut)
+    val inserts = tagged.filter(col("slice") === 1).select("src", "dst")
+    val deletes = tagged.filter(col("src").isin(2L, 3L) ||
+      col("dst").isin(2L, 3L)).select("src", "dst")
+    val (got, got2) = Streams.ccApplyDelta(spark, labels, live, inserts,
+      deletes)
+    val cut = tree.filter { case (a, b) => Set(a, b).intersect(Set(2L, 3L))
+      .isEmpty }
+    assert(got.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      cc(cut))
+    assert(got2.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
+      cut.toSet)
+  }
+
   test("S27b from a real stream: foreachBatch CDC fold (inserts + deletes) " +
       "== from-scratch CC after every batch") {
     import spark.implicits._
