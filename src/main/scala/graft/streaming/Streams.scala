@@ -395,8 +395,9 @@ object Streams {
     * graph ingestion's core maintenance problem. The merge works on the
     * QUOTIENT graph: each batch edge (u, v) becomes an edge between the
     * endpoints' CURRENT components (new vertices start as their own),
-    * star-contraction CC runs on that super-edge list — sized by the
-    * BATCH, not the graph — and the resulting `old comp → merged comp`
+    * CC runs on that super-edge list — sized by the BATCH, not the graph,
+    * so union-find on the driver ([[graft.ops.Graphs.connectedComponentsDF]])
+    * up to its broadcast bound — and the resulting `old comp → merged comp`
     * map (≤ 2·|batch| rows, broadcast) relabels the full table in one
     * join. Correct because existing labels already quotient all prior
     * edges, so CC(labels ∪ batch) = CC over the quotient; the min-id
@@ -412,7 +413,7 @@ object Streams {
     * plan-shape gate (StreamingSpec) can assert the relabel read's
     * Exchange budget on the pre-cut plan; production callers use
     * [[ccApplyBatch]]. The batch-sized intermediates (batch nodes, their
-    * known labels, the quotient edges) are still cut eagerly here, each
+    * label lookup, the quotient edges) are still cut eagerly here, each
     * once, and their sizes are observed on those cuts' jobs: a batch
     * that merges nothing runs no count or emptiness job of its own.
     */
@@ -432,19 +433,20 @@ object Streams {
     // pay. Restructured so every probe of the big table broadcasts the
     // BATCH side (the ccApplyDelta hint discipline): labels are now only
     // SCANNED, never exchanged — per-batch network cost tracks the batch.
-    //   known  = labels of batch ids already in the table (broadcast
-    //            semi probe; checkpoint-cut because recomputing it is
-    //            the one remaining labels scan);
-    //   newIds = batch ids not yet labeled, self-labeled — exactly the
-    //            rows the old coalesce() + anti join produced.
+    // `lab` is the batch's whole lookup in ONE cut: every batch id with
+    // its current label (the labels rows a broadcast semi probe keeps,
+    // outer-joined back onto the batch ids) or, when the table has none,
+    // itself, flagged `fresh` — the rows the fold adds to the table.
     def hint(df: DataFrame): DataFrame =
       if (nodeRows <= graft.ops.Graphs.FrontierBroadcastRows) broadcast(df)
       else df
-    val known = labels.join(hint(nodes), Seq("id"), "left_semi")
+    val lab = nodes
+      .join(hint(labels.select("id", "component")
+        .join(hint(nodes), Seq("id"), "left_semi")), Seq("id"), "left_outer")
+      .select(col("id"), coalesce(col("component"), col("id")).as("component"),
+        col("component").isNull.as("fresh"))
       .transform(graft.ops.Checkpoints.cut)
-    val newIds = nodes.join(hint(known.select("id")), Seq("id"), "left_anti")
-      .select(col("id"), col("id").as("component"))
-    val lab = known.unionByName(newIds)
+    val newIds = lab.filter(col("fresh")).select("id", "component")
     val superEdges = e
       .join(hint(lab.select(col("id").as("src"), col("component").as("c1"))),
         "src")
@@ -461,11 +463,25 @@ object Streams {
       else graft.ops.Graphs.connectedComponentsDF(s, superCut)
         .filter(col("id") =!= col("component"))
         .select(col("id").as("component"), col("component").as("__new"))
-    val all = labels.unionByName(newIds)
+    val all = foldUnion(labels, labels, newIds)
     if (remap == null) all
     else all.join(broadcast(remap), Seq("component"), "left")
       .select(col("id"),
         coalesce(col("__new"), col("component")).as("component"))
+  }
+
+  /** `kept ∪ added` as the next maintained label table, coalesced to
+    * at most max(partitions of `labels`, spark.sql.shuffle.partitions):
+    * a plain union gains the batch's partitions on every fold, and every
+    * later scan of the table would pay one task per partition ever added.
+    * `labels` is the fold's input table — a lineage cut, so sizing it
+    * runs no job.
+    */
+  private def foldUnion(labels: DataFrame, kept: DataFrame,
+      added: DataFrame): DataFrame = {
+    val bound = math.max(labels.rdd.getNumPartitions,
+      labels.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
+    kept.unionByName(added).coalesce(bound)
   }
 
   /** S27b — incremental connected components WITH RETRACTIONS: one
@@ -484,7 +500,7 @@ object Streams {
     * 1. live′ = live ∖ deletes (one left-anti join);
     * 2. touched = the components of the deleted edges' endpoints (≤
     *    2·|deletes| component ids);
-    * 3. star-contraction CC re-runs ONLY on live′ edges inside touched
+    * 3. CC re-runs ONLY on live′ edges inside touched
     *    components (one semi join carves the subgraph — an edge never
     *    crosses components, so filtering by the src label is complete);
     *    vertices left edge-less by the deletes drop out, exactly as a
@@ -529,9 +545,10 @@ object Streams {
         Seq("src"), "left_semi")
       val recolored = graft.ops.Graphs.connectedComponentsDF(s, sub)
         .select(col("id"), col("component"))
-      (liveD, labels.join(hint(touched), Seq("component"), "left_anti")
-        .select(col("id"), col("component"))
-        .unionByName(recolored)
+      (liveD, foldUnion(labels,
+          labels.join(hint(touched), Seq("component"), "left_anti")
+            .select(col("id"), col("component")),
+          recolored)
         .transform(graft.ops.Checkpoints.cut))
     }
     val ins = inserts.select(col("src").cast("long"), col("dst").cast("long"))

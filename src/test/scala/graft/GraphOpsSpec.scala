@@ -136,11 +136,52 @@ class GraphOpsSpec extends SparkSpecBase {
     val edges = Seq((2L, 1L), (3L, 2L), (7L, 3L), (4L, 5L),
       (9L, 8L), (10L, 9L), (11L, 12L), (12L, 11L))
       .toDF("src", "dst")
-    val dfcc = Graphs.connectedComponentsDF(spark, edges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(dfcc == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 1L,
+    val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 1L,
       4L -> 4L, 5L -> 4L, 8L -> 8L, 9L -> 8L, 10L -> 8L,
-      11L -> 11L, 12L -> 11L))
+      11L -> 11L, 12L -> 11L)
+    // a graph this small takes the driver union-find path, so the star
+    // contraction is pinned through its own entry point
+    def labels(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(labels(Graphs.starContractionCC(spark, edges)) == want)
+    assert(labels(Graphs.connectedComponentsDF(spark, edges)) == want)
+  }
+
+  test("CC paths agree: driver union-find == star contraction == GraphX " +
+      "== local union-find (random, 8 trials + empty input)") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(20261018L)
+    def labels(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    for (trial <- 0 to 8) {
+      // ids from a pool with negatives and both Long extremes; trial 0
+      // is the empty input
+      val pool = (Seq(Long.MinValue, Long.MaxValue, Long.MinValue + 1,
+          Long.MaxValue - 1, -1L, 0L) ++
+        Seq.fill(24)(rnd.nextInt(200).toLong - 100)).distinct
+      def v() = pool(rnd.nextInt(pool.length))
+      val random = Seq.fill(if (trial == 0) 0 else rnd.nextInt(30))((v(), v()))
+      // disjoint pairs (ids no random edge uses), 2-cycles, duplicates,
+      // self-loops (one on an id no other edge has, which must not appear)
+      val pairs = if (trial == 0) Nil
+        else (0 until 3).map(i => (1000L + 10 * trial + 2 * i,
+          1001L + 10 * trial + 2 * i))
+      val twoCycles = random.take(2).map(_.swap)
+      val dups = random.take(3)
+      val loops = if (trial == 0) Nil
+        else { val x = v(); Seq((x, x), (5000L + trial, 5000L + trial)) }
+      val edges = rnd.shuffle(random ++ pairs ++ twoCycles ++ dups ++ loops)
+      val df = edges.toDF("src", "dst")
+      val want = unionFindLabels(edges)
+      assert(labels(Graphs.connectedComponentsDF(spark, df)) == want,
+        s"driver union-find (trial $trial)")
+      assert(labels(Graphs.starContractionCC(spark, df)) == want,
+        s"star contraction (trial $trial)")
+      // GraphX keeps the endpoints of self-loops; compare on the rest
+      assert(labels(Graphs.connectedComponents(spark,
+          edges.filter(e => e._1 != e._2).toDF("src", "dst"))) == want,
+        s"GraphX (trial $trial)")
+    }
   }
 
   test("connectedComponentsDF == GraphX on the fixture co-part graph") {
@@ -250,8 +291,15 @@ class GraphOpsSpec extends SparkSpecBase {
     val edges = (pairs ++ pairs.map(p => (p._2, p._1))).toDF("src", "dst")
     def bfs() = Graphs.bfsDepthsDF(spark, edges, 1L, 5)
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    def cc() = Graphs.connectedComponentsDF(spark, edges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // the star contraction, which a graph this small reaches only through
+    // its own entry point, and the driver union-find path; both must agree
+    def cc() = {
+      def labels(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val star = labels(Graphs.starContractionCC(spark, edges))
+      assert(labels(Graphs.connectedComponentsDF(spark, edges)) == star)
+      star
+    }
     // the maintained folds, whose cuts report their sizes through an
     // Observation: an insert fold, then a delta that retracts the (2,3)
     // bridge and links 4 to the other component
@@ -308,7 +356,7 @@ class GraphOpsSpec extends SparkSpecBase {
     // a 64-vertex path takes several two-round steps to contract
     val edges = (1L until 64L).map(i => (i, i + 1)).toDF("src", "dst")
     val (labels, jobs) = jobSites(
-      Graphs.connectedComponentsDF(spark, edges).collect())
+      Graphs.starContractionCC(spark, edges).collect())
     val byAction = jobs.groupBy(_._2).values.map(js => js.head._1 -> js.length)
       .toSeq
     val (cuts, rest) = byAction.partition(
@@ -321,6 +369,20 @@ class GraphOpsSpec extends SparkSpecBase {
     assert(rest.map(_._1).filterNot(_.startsWith("collect at GraphOpsSpec"))
       .sorted.map(_.takeWhile(_ != ':')) ==
       Seq("count at Graphs.scala", "count at Graphs.scala"), jobs)
+    assert(labels.map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      (1L to 64L).map(_ -> 1L).toMap)
+  }
+
+  test("connectedComponentsDF job gate: a broadcast-sized input runs two " +
+      "jobs — the edge cut and the collect of its edges") {
+    import spark.implicits._
+    // the 64-vertex path the star contraction needs several steps for
+    val edges = (1L until 64L).map(i => (i, i + 1)).toDF("src", "dst")
+    val (labels, jobs) = jobSites(
+      Graphs.connectedComponentsDF(spark, edges).collect())
+    assert(jobs.map(_._1.takeWhile(_ != ':')) ==
+      Seq("localCheckpoint at Checkpoints.scala", "collect at Graphs.scala"),
+      jobs)
     assert(labels.map(r => r.getLong(0) -> r.getLong(1)).toMap ==
       (1L to 64L).map(_ -> 1L).toMap)
   }

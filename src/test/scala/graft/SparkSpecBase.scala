@@ -81,6 +81,26 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  /** Min-id connected-component labels over the endpoints of the
+    * non-self-loop `edges`, by a local union-find: the reference every
+    * CC path (driver union-find, star contraction, GraphX, the maintained
+    * folds) is checked against.
+    */
+  def unionFindLabels(edges: Iterable[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      if (a != b) {
+        val (ra, rb) = (find(a), find(b))
+        if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      }
+    }
+    parent.keys.map(v => v -> find(v)).toMap
+  }
+
   val sfDir = "/root/testdata/sf0.001"
 
   lazy val spark: SparkSession = SparkSession.builder()

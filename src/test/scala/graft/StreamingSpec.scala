@@ -1435,8 +1435,78 @@ class StreamingSpec extends SparkSpecBase {
     // (its own, or the broadcast build of a batch-side probe)
     assert(sites.nonEmpty && sites.forall(_.contains(" at Checkpoints.scala:")),
       sites)
+    // 8 jobs: the node cut; the lookup cut and its two broadcast builds;
+    // the quotient-edge cut and its two endpoint broadcasts; the table cut
+    assert(jobs.length <= 8, sites)
     assert(out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
       (0L until 500L).map(i => i -> i / 5 * 5).toMap)
+  }
+
+  test("maintained CC label table keeps a bounded partition count over " +
+      "20 insert folds and 3 retraction folds; labels == union-find") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(23)
+    def snap(df: DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    var labels = Seq.empty[(Long, Long)].toDF("id", "component")
+      .transform(graft.ops.Checkpoints.cut)
+    val bound = math.max(labels.rdd.getNumPartitions,
+      spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    var edgeSet = Set.empty[(Long, Long)]
+    for (b <- 1 to 20) {
+      val batch = Seq.fill(6)((rnd.nextInt(120).toLong,
+        rnd.nextInt(120).toLong))
+      labels = Streams.ccApplyBatch(spark, labels, batch.toDF("src", "dst"))
+      edgeSet ++= batch
+      assert(labels.rdd.getNumPartitions <= bound, s"insert fold $b")
+    }
+    assert(snap(labels) == unionFindLabels(edgeSet))
+    var live = edgeSet.toSeq.toDF("src", "dst")
+      .transform(graft.ops.Checkpoints.cut)
+    for (b <- 1 to 3) {
+      val dels = rnd.shuffle(edgeSet.toSeq).take(8)
+      val ins = Seq.fill(3)((rnd.nextInt(120).toLong, rnd.nextInt(120).toLong))
+      val r = Streams.ccApplyDelta(spark, labels, live, ins.toDF("src", "dst"),
+        dels.toDF("src", "dst"))
+      labels = r._1; live = r._2
+      edgeSet = edgeSet -- dels ++ ins.filter(e => e._1 != e._2)
+      assert(labels.rdd.getNumPartitions <= bound, s"retraction fold $b")
+      assert(snap(labels) == unionFindLabels(edgeSet), s"retraction fold $b")
+    }
+  }
+
+  test("delete-fold job gate: a small ccApplyDelta runs its CCs on the " +
+      "driver — no star-forest count, no contraction-round cut") {
+    import spark.implicits._
+    def sym(pairs: (Long, Long)*): Seq[(Long, Long)] =
+      pairs.flatMap(p => Seq(p, p.swap))
+    // two triangles joined by a bridge, and a far edge; the batch retracts
+    // the bridge (a split: the recolour runs a CC) and inserts edges that
+    // merge the far edge into the first triangle and link 6 to 40 (the
+    // quotient merge runs a CC)
+    val tri1 = sym((1L, 2L), (2L, 3L), (1L, 3L))
+    val tri2 = sym((5L, 6L), (6L, 7L), (5L, 7L))
+    val bridge = sym((3L, 5L))
+    val far = sym((20L, 21L))
+    val before = tri1 ++ tri2 ++ bridge ++ far
+    val ins = sym((21L, 2L), (6L, 40L))
+    val labels = unionFindLabels(before).toSeq.toDF("id", "component")
+      .transform(graft.ops.Checkpoints.cut)
+    val live = before.toDF("src", "dst").transform(graft.ops.Checkpoints.cut)
+    val ((got, _), jobs) = jobSites(Streams.ccApplyDelta(spark, labels, live,
+      ins.toDF("src", "dst"), bridge.toDF("src", "dst")))
+    val sites = jobs.map(_._1.takeWhile(_ != ':'))
+    assert(!sites.contains("count at Graphs.scala"), jobs)
+    // each CC is one edge cut and one collect
+    assert(sites.count(_ == "collect at Graphs.scala") == 2, jobs)
+    // the cuts are the fold's own nine (deletes, live', touched ids,
+    // labels', live; batch nodes, lookup, quotient edges, table) plus each
+    // CC's edge cut: a contraction round or vertex cut would add more
+    val cutActions = jobs.filter(_._1.startsWith("localCheckpoint at " +
+      "Checkpoints.scala:")).map(_._2).distinct
+    assert(cutActions.length == 11, jobs)
+    assert(got.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      unionFindLabels(tri1 ++ tri2 ++ far ++ ins))
   }
 
   test("S27b deltas drawn from the live frame: inserts and deletes that " +
