@@ -8,6 +8,10 @@ import graft.ops.Graphs
   */
 class GraphOpsSpec extends SparkSpecBase {
 
+  /** (id, component) rows as a map. */
+  private def labels(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
   test("earliestArrival respects edge availability times") {
     import spark.implicits._
     // Graph: 1 -> 2 -> 4 (slow but usable), 1 -> 3 -> 4 (3->4 departs
@@ -141,8 +145,6 @@ class GraphOpsSpec extends SparkSpecBase {
       11L -> 11L, 12L -> 11L)
     // a graph this small takes the driver union-find path, so the star
     // contraction is pinned through its own entry point
-    def labels(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labels(Graphs.starContractionCC(spark, edges)) == want)
     assert(labels(Graphs.connectedComponentsDF(spark, edges)) == want)
   }
@@ -151,8 +153,6 @@ class GraphOpsSpec extends SparkSpecBase {
       "== local union-find (random, 8 trials + empty input)") {
     import spark.implicits._
     val rnd = new scala.util.Random(20261018L)
-    def labels(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     for (trial <- 0 to 8) {
       // ids from a pool with negatives and both Long extremes; trial 0
       // is the empty input
@@ -294,8 +294,6 @@ class GraphOpsSpec extends SparkSpecBase {
     // the star contraction, which a graph this small reaches only through
     // its own entry point, and the driver union-find path; both must agree
     def cc() = {
-      def labels(df: org.apache.spark.sql.DataFrame) =
-        df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val star = labels(Graphs.starContractionCC(spark, edges))
       assert(labels(Graphs.connectedComponentsDF(spark, edges)) == star)
       star
