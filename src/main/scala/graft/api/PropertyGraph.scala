@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 
 /** The engine's user-facing property-graph surface: vertices and edges as
   * plain DataFrames (`id`, ... / `src`, `dst`, ...), DataFrame plans for
-  * the frequent degree/traversal shapes, GraphX/Pregel behind the
-  * iterative algorithms. GraphFrames-like by design (it is not on the
+  * the frequent degree/traversal shapes, DataFrame frontier iterations
+  * behind the iterative algorithms (their GraphX twins live in test
+  * scope as equivalence oracles). GraphFrames-like by design (it is not on the
   * classpath) but built directly on the engine's operators.
   */
 case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
@@ -39,7 +40,7 @@ case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     * an adaptive (count-gated) frontier broadcast. The default
     * `maxDepth` runs to the fix point: unbounded reachability, terminated
     * by the empty-frontier early exit after diameter+1 levels. (The
-    * GraphX/Pregel twin lives in [[Graphs.bfsDepths]].)
+    * GraphX/Pregel twin lives in test scope, `GraphXOracles.bfsDepths`.)
     */
   def bfs(seed: Long, maxDepth: Int = Int.MaxValue): DataFrame =
     Graphs.bfsDepthsDF(spark, edges.select("src", "dst"), seed, maxDepth)
@@ -83,7 +84,8 @@ case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
   }
 
   /** Static PageRank with a fixed iteration count — DataFrame power
-    * iteration (the GraphX twin is the 1e-6 equivalence oracle).
+    * iteration (the test-scope GraphX twin is the 1e-6 equivalence
+    * oracle).
     */
   def pageRank(iters: Int): DataFrame =
     Graphs.pageRankDF(spark, edges.select("src", "dst"), iters)
@@ -110,7 +112,8 @@ case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
       rounds, iters)
 
   /** Personalized PageRank from `seed` (reset mass to the seed, ranks
-    * L1-normalized) — DataFrame power iteration, GraphX twin-gated.
+    * L1-normalized) — DataFrame power iteration, gated against the
+    * test-scope GraphX twin.
     */
   def personalizedPageRank(seed: Long, iters: Int): DataFrame =
     Graphs.personalizedPageRankDF(spark, edges.select("src", "dst"),

@@ -1,15 +1,15 @@
 package graft.ops
 
-import org.apache.spark.graphx.{Edge, Graph, Pregel, VertexId}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Graph layer (SURVEY.md §2.2): canonical derived graphs over the testdata
-  * plus GraphX/Pregel algorithms. DataFrames are the source of truth;
-  * graphs are projected NARROW (ids + the one needed attribute) right
-  * before the RDD conversion so no wide rows cross the GraphX boundary.
+  * plus the graph algorithms over them, every one a DataFrame frontier
+  * iteration inside Catalyst/Tungsten (no RDD conversion). The GraphX
+  * twins of BFS, CC, (personalized) PageRank, the temporal paths and the
+  * triangle count live in test scope (`graft.GraphXOracles`) as the
+  * reference implementations the equivalence tests compare against.
   *
   * Heterogeneous vertex ids live in one Long space via type-tag offsets —
   * entity keys are < 10^9 in all testdata SFs, and a 100 TB graph with
@@ -291,39 +291,18 @@ object Graphs {
         col("ts_us").as("avail_us"), col("dst_ts_us").as("arrive_us"))
   }
 
-  private def toGraph(edges: DataFrame): Graph[Unit, Int] = {
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .rdd.map(r => Edge(r.getLong(0), r.getLong(1), 1))
-    Graph.fromEdges(e, (), StorageLevel.MEMORY_AND_DISK, StorageLevel.MEMORY_AND_DISK)
-  }
-
-  /** Bounded-depth BFS from `seed`: (id, dist) for dist <= maxDepth.
-    * Pregel min-plus; maxIterations bounds the supersteps, so the job cost
-    * is depth × shuffle regardless of graph size.
-    */
-  def bfsDepths(s: SparkSession, edges: DataFrame, seed: Long, maxDepth: Int): DataFrame = {
-    val g = toGraph(edges).mapVertices((id, _) =>
-      if (id == seed) 0 else Int.MaxValue)
-    val res = Pregel(g, Int.MaxValue, maxIterations = maxDepth)(
-      (_, d, msg) => math.min(d, msg),
-      t => if (t.srcAttr != Int.MaxValue && t.srcAttr + 1 < t.dstAttr)
-        Iterator((t.dstId, t.srcAttr + 1)) else Iterator.empty,
-      math.min)
-    s.createDataFrame(res.vertices.filter(_._2 != Int.MaxValue)
-      .map { case (id, d) => (id, d) })
-      .toDF("id", "dist")
-  }
-
   /** Bounded-depth BFS as pure DataFrame iteration — the Catalyst-native
-    * twin of [[bfsDepths]] (GraphOpsSpec asserts they agree). Per level:
+    * twin of GraphX's Pregel BFS (GraphOpsSpec asserts they agree against
+    * the test-scope `GraphXOracles.bfsDepths`). Per level:
     * one join of the checkpointed edge list against the broadcast
     * frontier + one anti join against the visited set, all inside
     * Tungsten — no RDD conversion, no GraphX vertex/edge replication.
     * Early-exits when a level adds nothing.
     *
-    * Scale notes: each level's frontier is materialized (localCheckpoint)
-    * for the early-exit test anyway, so its row count is known for free —
-    * the broadcast decision is ADAPTIVE: frontiers up to `broadcastRows`
+    * Scale notes: each level's frontier is materialized
+    * ([[Checkpoints.cutCounted]]) and its row count observed on the cut's
+    * own job, so the early-exit test costs no job and the broadcast
+    * decision is ADAPTIVE: frontiers up to `broadcastRows`
     * ([[FrontierBroadcastRows]]) ship as broadcasts, larger ones
     * shuffle-join (no executor-memory cliff when a hub level explodes).
     * `visited` stays partitioned. Cost = depth × (one scan of E + one
@@ -344,11 +323,12 @@ object Graphs {
       depth += 1
       val probe = if (frontierRows <= broadcastRows) broadcast(frontier)
         else frontier
-      frontier = e.join(probe, col("src") === col("id"))
-        .select(col("dst").as("id")).distinct()
-        .join(visited, Seq("id"), "left_anti")
-        .transform(Checkpoints.cut)
-      frontierRows = frontier.count()
+      val (next, rows) = Checkpoints.cutCounted(
+        e.join(probe, col("src") === col("id"))
+          .select(col("dst").as("id")).distinct()
+          .join(visited, Seq("id"), "left_anti"))
+      frontier = next
+      frontierRows = rows
       if (frontierRows > 0) visited = visited
         .unionAll(frontier.select(col("id"), lit(depth).as("dist")))
         .transform(Checkpoints.cut)
@@ -874,16 +854,10 @@ object Graphs {
     dist
   }
 
-  /** Connected components (GraphX label = min vertex id in component). */
-  def connectedComponents(s: SparkSession, edges: DataFrame): DataFrame = {
-    val res = toGraph(edges).connectedComponents()
-    s.createDataFrame(res.vertices.map { case (id, lbl) => (id, lbl) })
-      .toDF("id", "component")
-  }
-
   /** Connected components, labelled by the minimum vertex id of each
-    * component — the Catalyst-native twin of [[connectedComponents]]
-    * (GraphOpsSpec asserts they agree). The vertex set is the endpoints
+    * component — the Catalyst-native twin of GraphX's
+    * `connectedComponents` (GraphOpsSpec asserts they agree against the
+    * test-scope `GraphXOracles`). The vertex set is the endpoints
     * of the non-self-loop edges.
     *
     * The algorithm is chosen from the input's size, observed on the
@@ -981,7 +955,7 @@ object Graphs {
     * (worst graphs ~2·log n). Late-round degree concentrates on component
     * minima — inherent to the output shape (a star) — which parquet/
     * shuffle handle fine; only a pathological single-component 10^11-edge
-    * graph would want the GraphX fallback or salted roots.
+    * graph would want salted roots.
     */
   private[graft] def starContractionCC(s: SparkSession, edges: DataFrame,
       maxRounds: Int = 50): DataFrame = {
@@ -2032,15 +2006,19 @@ object Graphs {
     * by oriented out-degree); the restricted contract graph doesn't
     * need it.
     */
-  def trianglesPerVertex(pairs: DataFrame): DataFrame = {
-    val tri = pairs.as("ab")
+  def trianglesPerVertex(pairs: DataFrame): DataFrame =
+    triangles(pairs).select(explode(array(col("a"), col("b"), col("c"))).as("id"))
+      .groupBy("id").agg(count(lit(1)).as("n_triangles"))
+
+  /** Every triangle (a<b<c) of canonical `(x < y)` pairs, once, by the
+    * ab⋈bc⋈ac wedge-close join.
+    */
+  private def triangles(pairs: DataFrame): DataFrame =
+    pairs.as("ab")
       .join(pairs.as("bc"), col("ab.y") === col("bc.x"))
       .join(pairs.as("ac"),
         col("ac.x") === col("ab.x") && col("ac.y") === col("bc.y"))
       .select(col("ab.x").as("a"), col("ab.y").as("b"), col("bc.y").as("c"))
-    tri.select(explode(array(col("a"), col("b"), col("c"))).as("id"))
-      .groupBy("id").agg(count(lit(1)).as("n_triangles"))
-  }
 
   /** G27 — local clustering coefficient per vertex over canonical
     * `(x < y)` pairs: `coeff_e6 = 10^6 · n_triangles div n_wedges` with
@@ -2256,13 +2234,17 @@ object Graphs {
       .filter(col("w") >= minWeight)
   }
 
-  /** Global triangle count over canonical (src < dst) pairs. */
+  /** Global triangle count of the undirected simple graph the `(x, y)`
+    * pairs describe. The pairs are canonicalized first, as GraphX's
+    * TriangleCount does internally: each oriented x < y, self-loops
+    * dropped, duplicates removed. So reversed, repeated or self-loop
+    * pairs count as their undirected edge. Then [[triangles]] finds each
+    * triangle once.
+    */
   def triangleCount(s: SparkSession, pairs: DataFrame): Long = {
-    val e = pairs.select(col("x").cast("long"), col("y").cast("long"))
-      .rdd.map(r => Edge(r.getLong(0), r.getLong(1), 1))
-    val g = Graph.fromEdges(e, (), StorageLevel.MEMORY_AND_DISK,
-      StorageLevel.MEMORY_AND_DISK)
-    g.triangleCount().vertices.map(_._2.toLong).reduce(_ + _) / 3
+    val (x, y) = (col("x").cast("long"), col("y").cast("long"))
+    triangles(pairs.select(least(x, y).as("x"), greatest(x, y).as("y"))
+      .filter(col("x") < col("y")).distinct()).count()
   }
 
   /** G32 — truncated Katz centrality, EXACT integers: walk counts of
@@ -2299,15 +2281,9 @@ object Graphs {
           coalesce(col("w3"), lit(0L))).as("katz_x64"))
   }
 
-  /** Static PageRank, fixed iteration count (tolerance-gated, SURVEY G08). */
-  def pageRank(s: SparkSession, edges: DataFrame, iters: Int): DataFrame = {
-    val ranks = toGraph(edges).staticPageRank(iters).vertices
-    s.createDataFrame(ranks.map { case (id, r) => (id, r) })
-      .toDF("id", "rank")
-  }
-
   /** Static PageRank as pure DataFrame power iteration — the
-    * Catalyst-native twin of [[pageRank]] (ToleranceSpec asserts
+    * Catalyst-native twin of GraphX's `staticPageRank` (ToleranceSpec
+    * asserts, against the test-scope `GraphXOracles.pageRank`,
     * agreement within 1e-6 and identical top-20 order). Replicates
     * `staticPageRank`'s recurrence exactly: rank0 = 1, rank' =
     * 0.15 + 0.85·Σ rank(u)/outdeg(u), dangling mass not redistributed,
@@ -2354,16 +2330,6 @@ object Graphs {
       (count(lit(1)).cast("double") / sum(col("rank"))).as("__scale"))
     ranks.crossJoin(broadcast(st))
       .select(col("id"), (col("rank") * col("__scale")).as("rank"))
-  }
-
-  /** Personalized PageRank from `seed` via GraphX (equivalence oracle for
-    * [[personalizedPageRankDF]], tolerance-gated).
-    */
-  def personalizedPageRank(s: SparkSession, edges: DataFrame, seed: Long,
-      iters: Int): DataFrame = {
-    val ranks = toGraph(edges).staticPersonalizedPageRank(seed, iters).vertices
-    s.createDataFrame(ranks.map { case (id, r) => (id, r) })
-      .toDF("id", "rank")
   }
 
   /** G08b — personalized PageRank as pure DataFrame power iteration,
@@ -2746,31 +2712,17 @@ object Graphs {
   }
 
   /** Temporal earliest-arrival (SURVEY G10, the reference's signature
-    * traversal): from `seed`, an edge (u,v) is usable only if arrival(u) <=
-    * its availability time; arrival(v) = the hop's arrival time. Bounded to
-    * `maxHops` Pregel supersteps.
+    * traversal): from `seed`, present at `seedTsUs`, an edge (u,v) is
+    * usable only if arrival(u) <= its availability time; arrival(v) = the
+    * hop's arrival time. Returns (id, arrival_us), the earliest arrival
+    * over walks of at most `maxHops` edges ([[temporalFrontier]]). The
+    * seed is not pinned: a cycle that returns before `seedTsUs` lowers
+    * its own arrival.
     */
   def earliestArrival(s: SparkSession, edges: DataFrame, seed: Long,
-      seedTsUs: Long, maxHops: Int): DataFrame = {
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"),
-        col("avail_us").cast("long"), col("arrive_us").cast("long"))
-      .rdd.map(r => Edge(r.getLong(0), r.getLong(1), (r.getLong(2), r.getLong(3))))
-    val g = Graph.fromEdges(e, Long.MaxValue, StorageLevel.MEMORY_AND_DISK,
-        StorageLevel.MEMORY_AND_DISK)
-      .mapVertices((id, _) => if (id == seed) seedTsUs else Long.MaxValue)
-    val res = Pregel(g, Long.MaxValue, maxIterations = maxHops)(
-      (_, a, msg) => math.min(a, msg),
-      t => {
-        val (avail, arrive) = t.attr
-        if (t.srcAttr != Long.MaxValue && t.srcAttr <= avail && arrive < t.dstAttr)
-          Iterator((t.dstId, arrive))
-        else Iterator.empty
-      },
-      math.min)
-    s.createDataFrame(res.vertices.filter(_._2 != Long.MaxValue)
-      .map { case (id, a) => (id, a) })
+      seedTsUs: Long, maxHops: Int): DataFrame =
+    temporalFrontier(s, edges, seed, seedTsUs, maxHops, forward = true)
       .toDF("id", "arrival_us")
-  }
 
   /** Temporal latest-departure (G10b) — the backward twin of
     * [[earliestArrival]], completing the classic temporal-path triple
@@ -2779,35 +2731,81 @@ object Graphs {
     * `deadlineUs`. An edge (u,v,avail,arrive) is usable iff its arrival
     * makes v's own latest departure (`arrive <= d(v)`); using it means
     * leaving u no later than its availability, so d(u) = max over usable
-    * out-edges of avail. Max-aggregation Pregel seeded at the target,
-    * messages flowing dst→src, bounded to `maxHops` supersteps — the
-    * same O(hops × E) shape as the forward traversal. Returns
+    * out-edges of avail. The same frontier as the forward traversal, run
+    * from the target against the edge direction ([[temporalFrontier]]),
+    * bounded to `maxHops` edges. The target is pinned at the deadline: a
+    * cycle back into it (depart late, loop, re-arrive in time) must not
+    * raise its own latest departure past the deadline. Returns
     * (id, depart_us) for vertices that can reach the target in time.
     */
   def latestDeparture(s: SparkSession, edges: DataFrame, target: Long,
-      deadlineUs: Long, maxHops: Int): DataFrame = {
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"),
-        col("avail_us").cast("long"), col("arrive_us").cast("long"))
-      .rdd.map(r => Edge(r.getLong(0), r.getLong(1), (r.getLong(2), r.getLong(3))))
-    val g = Graph.fromEdges(e, Long.MinValue, StorageLevel.MEMORY_AND_DISK,
-        StorageLevel.MEMORY_AND_DISK)
-      .mapVertices((id, _) => if (id == target) deadlineUs else Long.MinValue)
-    // the target's own value is pinned at the deadline: a cycle back
-    // into the target (depart late, loop, re-arrive in time) must not
-    // raise "latest departure from the target" past the deadline itself
-    val res = Pregel(g, Long.MinValue, maxIterations = maxHops)(
-      (id, d, msg) => if (id == target) d else math.max(d, msg),
-      t => {
-        val (avail, arrive) = t.attr
-        if (t.dstAttr != Long.MinValue && arrive <= t.dstAttr &&
-            avail > t.srcAttr && t.srcId != target)
-          Iterator((t.srcId, avail))
-        else Iterator.empty
-      },
-      math.max)
-    s.createDataFrame(res.vertices.filter(_._2 != Long.MinValue)
-      .map { case (id, d) => (id, d) })
+      deadlineUs: Long, maxHops: Int): DataFrame =
+    temporalFrontier(s, edges, target, deadlineUs, maxHops, forward = false)
       .toDF("id", "depart_us")
+
+  /** The relaxation frontier under both temporal paths: Bellman-Ford over
+    * (src, dst, avail_us, arrive_us) edges from `origin` at `originUs`,
+    * synchronous per hop, so the result is the best time over walks of at
+    * most `maxHops` edges. Forward, a vertex reached at t may leave on any
+    * edge with t <= avail and reaches dst at arrive (minimum kept).
+    * Backward, a vertex that must be left by t is reached from src on any
+    * edge with arrive <= t, leaving src at avail (maximum kept), and the
+    * origin never takes a value but its own.
+    *
+    * The vertex set is the edge endpoints: an origin no edge touches gives
+    * an empty result, and so does an origin time equal to the direction's
+    * sentinel (`Long.MaxValue` forward, `Long.MinValue` backward), which
+    * is never emitted. Per hop, ONE cut job: the frontier (vertices that
+    * improved last hop) joins the edges — broadcast up to
+    * [[FrontierBroadcastRows]] rows, shuffled past it — and the improved
+    * candidates merge into the state, whose new-frontier size the cut
+    * observes. The loop exits early when a hop improves nothing. Returns
+    * (id, t).
+    */
+  private def temporalFrontier(s: SparkSession, edges: DataFrame,
+      origin: Long, originUs: Long, maxHops: Int,
+      forward: Boolean): DataFrame = {
+    import s.implicits._
+    val (from, to, gate, reach) =
+      if (forward) ("src", "dst", "avail_us", "arrive_us")
+      else ("dst", "src", "arrive_us", "avail_us")
+    val sentinel = if (forward) Long.MaxValue else Long.MinValue
+    def better(a: Column, b: Column): Column = if (forward) a < b else a > b
+    val (e0, touch) = Checkpoints.cutObserved(
+      edges.select(Seq("src", "dst", "avail_us", "arrive_us")
+        .map(c => col(c).cast("long")): _*),
+      count(when(col("src") === origin || col("dst") === origin, 1))
+        .as("touch"))
+    if (touch.getLong(0) == 0 || originUs == sentinel)
+      return Seq.empty[(Long, Long)].toDF("id", "t")
+    val all = e0.select(col(from).as("from"), col(to).as("id"),
+        col(gate).as("gate"), col(reach).as("t"))
+      .filter(col("t") =!= sentinel)
+    val e = if (forward) all else all.filter(col("id") =!= origin)
+    var state = Seq((origin, originUs, true)).toDF("id", "t", "fresh")
+    var fresh = 1L
+    var hop = 0
+    while (fresh > 0 && hop < maxHops) {
+      hop += 1
+      val front = state.filter(col("fresh"))
+        .select(col("id").as("from"), col("t").as("from_t"))
+      val probe = if (fresh <= FrontierBroadcastRows) broadcast(front)
+        else front
+      val cand = e.join(probe, "from")
+        .filter(!better(col("gate"), col("from_t")))
+        .groupBy("id")
+        .agg((if (forward) min(col("t")) else max(col("t"))).as("cand"))
+      val improved = col("cand").isNotNull &&
+        (col("t").isNull || better(col("cand"), col("t")))
+      val (next, r) = Checkpoints.cutObserved(
+        state.select("id", "t").join(cand, Seq("id"), "full_outer")
+          .select(col("id"), when(improved, col("cand")).otherwise(col("t"))
+            .as("t"), improved.as("fresh")),
+        count(when(col("fresh"), 1)).as("fresh"))
+      state = next
+      fresh = r.getLong(0)
+    }
+    state.select("id", "t")
   }
 
   /** Temporal fastest-journey (G10c) — the triple's third member: the
@@ -2843,14 +2841,14 @@ object Graphs {
         .filter(col("__best").isNull || col("arr_us") < col("__best"))
         .drop("__best")
     }
-    var all = pareto(
-        e.filter(col("src") === seed)
-          .select(col("dst").as("id"), col("avail_us").as("start_us"),
-            col("arrive_us").as("arr_us"))
-          .distinct())
-      .transform(Checkpoints.cut)
+    val (all0, rows0) = Checkpoints.cutCounted(pareto(
+      e.filter(col("src") === seed)
+        .select(col("dst").as("id"), col("avail_us").as("start_us"),
+          col("arrive_us").as("arr_us"))
+        .distinct()))
+    var all = all0
     var frontier = all
-    var newRows = frontier.count()
+    var newRows = rows0
     var hops = 1
     while (newRows > 0 && hops < maxHops) {
       hops += 1
@@ -2862,11 +2860,11 @@ object Graphs {
           col("arrive_us").as("arr_us"))
         .distinct()
       val pruned = pareto(all.unionAll(extended)).transform(Checkpoints.cut)
-      frontier = pruned
-        .join(all, Seq("id", "start_us", "arr_us"), "left_anti")
-        .transform(Checkpoints.cut)
+      val (next, rows) = Checkpoints.cutCounted(
+        pruned.join(all, Seq("id", "start_us", "arr_us"), "left_anti"))
+      frontier = next
       all = pruned
-      newRows = frontier.count()
+      newRows = rows
     }
     all.filter(col("id") =!= seed)
       .groupBy("id")

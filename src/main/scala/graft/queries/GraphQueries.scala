@@ -7,8 +7,10 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Graph operators (SURVEY.md §2.2 G01–G10) over the canonical derived
-  * graphs (FIXTURES.md). Iterative algorithms run on GraphX/Pregel with
-  * bounded supersteps; oracles are recursive CTEs with the same bounds.
+  * graphs (FIXTURES.md). Iterative algorithms run as DataFrame frontier
+  * iterations with bounded rounds (their GraphX twins live in test scope
+  * as equivalence oracles); oracles are recursive CTEs with the same
+  * bounds.
   */
 object GraphQueries {
 
@@ -121,8 +123,8 @@ object GraphQueries {
 
     // G04 — bounded reachability (<= 3 hops) from the smallest part in the
     // restricted co-part graph, via the Catalyst-native level-synchronous
-    // BFS (bfsDepthsDF; the GraphX/Pregel twin bfsDepths is asserted
-    // equal in GraphOpsSpec — same supersteps, no RDD boundary).
+    // BFS (bfsDepthsDF; DataFrame frontier, asserted equal in GraphOpsSpec
+    // to the test-scope GraphX twin GraphXOracles.bfsDepths).
     "g04_reachability" -> ((s, dir) => {
       // localCheckpoint, not cache: materialized once (seed scan + BFS
       // levels all read the blocks), freed by the ContextCleaner.
@@ -161,7 +163,7 @@ object GraphQueries {
     // G06 — connected components of the restricted co-part graph (label =
     // min vertex id in component), via the Catalyst-native alternating
     // large-star/small-star rounds (O(log n) rounds, window-min shuffles;
-    // the GraphX twin is asserted equal in GraphOpsSpec).
+    // the test-scope GraphX twin is asserted equal in GraphOpsSpec).
     "g06_connected_components" -> ((s, dir) => {
       Graphs.connectedComponentsDF(s, Graphs.copartEdges(s, dir))
         .select(col("id").as("p_partkey"), col("component"))
@@ -689,8 +691,8 @@ object GraphQueries {
     }),
 
     // G08 — PageRank on G_supply, 10 fixed iterations, via the
-    // Catalyst-native power iteration (pageRankDF; the GraphX twin is
-    // asserted within 1e-6 with identical top-20 order in ToleranceSpec).
+    // Catalyst-native power iteration (pageRankDF; the test-scope GraphX
+    // twin is asserted within 1e-6 with identical top-20 order in ToleranceSpec).
     // Tolerance-gated (float iteration order), no hash oracle; ScalaTest
     // also asserts rank-sum ≈ vertex count and top ranks stability.
     "g08_pagerank" -> ((s, dir) => {
@@ -701,8 +703,9 @@ object GraphQueries {
 
     // G08b — personalized PageRank from customer 1 on the supply graph:
     // "which parts of the graph matter to THIS entity". Ranks sum to 1,
-    // reported in parts-per-million. Tolerance-gated vs the GraphX
-    // staticPersonalizedPageRank twin (ToleranceSpec); rows-only here.
+    // reported in parts-per-million. Tolerance-gated vs the test-scope
+    // GraphX staticPersonalizedPageRank twin (ToleranceSpec); rows-only
+    // here.
     "g08b_ppr" -> ((s, dir) => {
       Graphs.personalizedPageRankDF(s,
           Graphs.supplyEdges(s, dir).select("src", "dst"),

@@ -1126,10 +1126,11 @@ object StreamQueries {
     }),
 
     // S12 — incremental temporal earliest-arrival. The streaming form
-    // (Streams.earliestArrivalStream) is asserted equal to the Pregel
-    // recomputation in StreamingSpec; THIS batch twin is that same
-    // earliest-arrival traversal (G10's seed and bounds) in the S12
-    // output shape (event_id, arrival_us), hash-checked against DuckDB.
+    // (Streams.earliestArrivalStream) is asserted equal in StreamingSpec
+    // to the batch recomputation by the test-scope GraphX twin; THIS
+    // batch twin is the DataFrame-frontier earliest-arrival traversal
+    // (G10's seed and bounds) in the S12 output shape
+    // (event_id, arrival_us), hash-checked against DuckDB.
     "s12_incremental_arrival" -> ((s, dir) => {
       val e = ev(s, dir)
       val seedRow = e.orderBy("event_id")

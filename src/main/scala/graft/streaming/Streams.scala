@@ -2757,8 +2757,8 @@ object Streams {
     * micro-batch replays; the in-batch slice is sorted here).
     *
     * Matches [[graft.ops.Graphs.earliestArrival]] on the same edge set
-    * (asserted in StreamingSpec) — the Pregel form recomputes from
-    * scratch; this maintains the answer incrementally as the reference's
+    * (StreamingSpec asserts it against the test-scope GraphX twin) — the
+    * batch frontier recomputes from scratch; this maintains the answer incrementally as the reference's
     * continuous temporal ingestion would.
     */
   case class TemporalEdge(user_id: Long, src: Long, dst: Long,

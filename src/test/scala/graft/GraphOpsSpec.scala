@@ -2,9 +2,11 @@ package graft
 
 import graft.ops.Graphs
 
-/** Direct algorithm tests for the GraphX layer, incl. the temporal
+/** Direct algorithm tests for the graph layer, incl. the temporal
   * earliest-arrival semantics on a multi-path graph (the fixture session
-  * graph is per-user chains; this exercises the general case).
+  * graph is per-user chains; this exercises the general case). The
+  * DataFrame kernels are compared against the GraphX twins in
+  * [[GraphXOracles]].
   */
 class GraphOpsSpec extends SparkSpecBase {
 
@@ -90,11 +92,144 @@ class GraphOpsSpec extends SparkSpecBase {
     assert(res == Set(1L, 2L, 3L)) // 4 is 3 hops away
   }
 
+  test("temporal paths: an origin no edge touches, or one at the " +
+      "sentinel time, gives an empty result (== GraphX)") {
+    import spark.implicits._
+    val edges = Seq((1L, 2L, 10L, 20L), (2L, 3L, 20L, 30L),
+      (3L, 4L, 30L, Long.MaxValue), (0L, 1L, Long.MinValue, 5L))
+      .toDF("src", "dst", "avail_us", "arrive_us")
+    def ea(seed: Long, ts: Long) = Seq(Graphs.earliestArrival(spark, edges,
+        seed, ts, maxHops = 5), GraphXOracles.earliestArrival(spark, edges,
+        seed, ts, maxHops = 5))
+      .map(_.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    def ld(target: Long, deadline: Long) = Seq(Graphs.latestDeparture(spark,
+        edges, target, deadline, maxHops = 5), GraphXOracles.latestDeparture(
+        spark, edges, target, deadline, maxHops = 5))
+      .map(_.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    // 99 is no edge's endpoint
+    assert(ea(99L, 0L) == Seq(Map(), Map()))
+    assert(ld(99L, 100L) == Seq(Map(), Map()))
+    // the sentinel origin time is never emitted
+    assert(ea(1L, Long.MaxValue) == Seq(Map(), Map()))
+    assert(ld(4L, Long.MinValue) == Seq(Map(), Map()))
+    // nor is an arrival at Long.MaxValue (3→4) or a departure at
+    // Long.MinValue (0→1)
+    val fwd = Map(1L -> 0L, 2L -> 20L, 3L -> 30L)
+    assert(ea(1L, 0L) == Seq(fwd, fwd))
+    val back = Map(3L -> 100L, 2L -> 20L, 1L -> 10L)
+    assert(ld(3L, 100L) == Seq(back, back))
+  }
+
+  test("earliestArrival: a cycle that returns early lowers the seed's own " +
+      "arrival (the seed is not pinned)") {
+    import spark.implicits._
+    // seed 1 at 4; 2→1 arrives at 3 < 4, and 1→3 (avail 3) is usable
+    // only from the lowered arrival
+    val edges = Seq((1L, 2L, 4L, 5L), (2L, 1L, 5L, 3L), (1L, 3L, 3L, 6L))
+      .toDF("src", "dst", "avail_us", "arrive_us")
+    def run(hops: Int) = Seq(
+        Graphs.earliestArrival(spark, edges, 1L, 4L, maxHops = hops),
+        GraphXOracles.earliestArrival(spark, edges, 1L, 4L, maxHops = hops))
+      .map(_.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    val full = Map(1L -> 3L, 2L -> 5L, 3L -> 6L)
+    assert(run(5) == Seq(full, full))
+    // two hops lower the seed; the third reaches 3
+    val two = Map(1L -> 3L, 2L -> 5L)
+    assert(run(2) == Seq(two, two))
+  }
+
+  test("latestDeparture: the target stays pinned at the deadline under a " +
+      "returning cycle") {
+    import spark.implicits._
+    // target 2, deadline 30. The cycle 2→3→2 would let one leave 2 at 40
+    // and still be back by the deadline (3→2 arrives 24 <= 30, 2→3
+    // arrives 22 <= d(3) = 23); pinned, d(2) stays 30, so 0→2 (arrive
+    // 38 > 30) stays unusable
+    val edges = Seq((1L, 2L, 10L, 20L), (3L, 2L, 23L, 24L),
+      (2L, 3L, 40L, 22L), (0L, 2L, 35L, 38L))
+      .toDF("src", "dst", "avail_us", "arrive_us")
+    val want = Map(2L -> 30L, 1L -> 10L, 3L -> 23L)
+    val got = Graphs.latestDeparture(spark, edges, 2L, 30L, maxHops = 6)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val gx = GraphXOracles.latestDeparture(spark, edges, 2L, 30L, maxHops = 6)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == want && gx == want, s"$got / GraphX $gx")
+  }
+
+  test("temporal paths == GraphX Pregel on the fixture session graph " +
+      "(both directions, maxHops = 8)") {
+    import org.apache.spark.sql.functions.col
+    val edges = Graphs.sessionEdges(spark, sfDir).localCheckpoint()
+    val seed = edges.orderBy("src").select("src", "avail_us").head()
+    // the target: the chain tip of the seed's session (its latest event)
+    val target = edges.orderBy(col("arrive_us").desc, col("dst").desc)
+      .select("dst", "arrive_us").head()
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val ea = rows(Graphs.earliestArrival(spark, edges, seed.getLong(0),
+      seed.getLong(1), maxHops = 8))
+    assert(ea.size > 1 && ea == rows(GraphXOracles.earliestArrival(spark,
+      edges, seed.getLong(0), seed.getLong(1), maxHops = 8)))
+    val ld = rows(Graphs.latestDeparture(spark, edges, target.getLong(0),
+      target.getLong(1), maxHops = 8))
+    assert(ld.size > 1 && ld == rows(GraphXOracles.latestDeparture(spark,
+      edges, target.getLong(0), target.getLong(1), maxHops = 8)))
+  }
+
+  test("frontier job gate: the temporal paths, fastestJourney and " +
+      "bfsDepthsDF run only cut jobs — no count at Graphs.scala") {
+    import spark.implicits._
+    // the chain 1→2→3→4→5, every hop usable
+    val edges = (1L to 4L).map(i => (i, i + 1, 10 * i, 10 * i + 5))
+      .toDF("src", "dst", "avail_us", "arrive_us")
+    def actions(run: => Array[org.apache.spark.sql.Row]) = {
+      val (out, jobs) = jobSites(run)
+      val sites = jobs.groupBy(_._2).values.map(_.head._1).toSeq
+        .filterNot(_.startsWith("collect at GraphOpsSpec"))
+      assert(sites.forall(_.startsWith("localCheckpoint at Checkpoints.scala:")),
+        jobs)
+      (out, sites.length)
+    }
+    // the edge cut, then one cut per hop: four hops improve, the fifth
+    // finds nothing and ends the loop
+    val (ea, eaCuts) = actions(Graphs.earliestArrival(spark, edges, 1L, 0L,
+      maxHops = 8).collect())
+    assert(eaCuts == 1 + 5 && ea.length == 5, ea.toSeq)
+    val (ld, ldCuts) = actions(Graphs.latestDeparture(spark, edges, 5L, 100L,
+      maxHops = 8).collect())
+    assert(ldCuts == 1 + 5 && ld.length == 5, ld.toSeq)
+    // the hop bound ends the loop first: the edge cut and two hops
+    val (_, boundCuts) = actions(Graphs.earliestArrival(spark, edges, 1L, 0L,
+      maxHops = 2).collect())
+    assert(boundCuts == 1 + 2)
+    val (fj, _) = actions(Graphs.fastestJourney(spark, edges, 1L,
+      maxHops = 8).collect())
+    assert(fj.length == 4)
+    val (bfs, _) = actions(Graphs.bfsDepthsDF(spark,
+      edges.select("src", "dst"), 1L, maxDepth = 8).collect())
+    assert(bfs.length == 5)
+  }
+
+  test("src/main has no GraphX: graph kernels are DataFrame frontiers, " +
+      "GraphX twins live in test scope") {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, root.getAbsolutePath)
+    def files(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
+    val sources = files(root).filter(_.getName.endsWith(".scala"))
+    val hits = sources.filter { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try src.getLines().exists(_.contains("org.apache.spark.graphx"))
+      finally src.close()
+    }
+    assert(sources.nonEmpty && hits.isEmpty, hits.mkString(", "))
+  }
+
   test("bfsDepths on a cycle terminates with minimum depths") {
     import spark.implicits._
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L))
       .toDF("src", "dst")
-    val res = Graphs.bfsDepths(spark, edges, seed = 1L, maxDepth = 10)
+    val res = GraphXOracles.bfsDepths(spark, edges, seed = 1L, maxDepth = 10)
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(res == Map(1L -> 0, 2L -> 1, 3L -> 2, 4L -> 3))
   }
@@ -105,7 +240,7 @@ class GraphOpsSpec extends SparkSpecBase {
       org.apache.spark.sql.functions.col("src"))).head().getLong(0)
     val viaDF = Graphs.bfsDepthsDF(spark, edges, seed, maxDepth = 4)
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val viaPregel = Graphs.bfsDepths(spark, edges, seed, maxDepth = 4)
+    val viaPregel = GraphXOracles.bfsDepths(spark, edges, seed, maxDepth = 4)
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(viaDF == viaPregel && viaDF.nonEmpty)
   }
@@ -178,7 +313,7 @@ class GraphOpsSpec extends SparkSpecBase {
       assert(labels(Graphs.starContractionCC(spark, df)) == want,
         s"star contraction (trial $trial)")
       // GraphX keeps the endpoints of self-loops; compare on the rest
-      assert(labels(Graphs.connectedComponents(spark,
+      assert(labels(GraphXOracles.connectedComponents(spark,
           edges.filter(e => e._1 != e._2).toDF("src", "dst"))) == want,
         s"GraphX (trial $trial)")
     }
@@ -188,7 +323,7 @@ class GraphOpsSpec extends SparkSpecBase {
     val edges = Graphs.copartEdges(spark, sfDir).localCheckpoint()
     val viaDF = Graphs.connectedComponentsDF(spark, edges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaGX = Graphs.connectedComponents(spark, edges)
+    val viaGX = GraphXOracles.connectedComponents(spark, edges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(viaDF == viaGX && viaDF.nonEmpty)
   }
@@ -199,6 +334,25 @@ class GraphOpsSpec extends SparkSpecBase {
     val pairs = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L))
       .toDF("x", "y")
     assert(Graphs.triangleCount(spark, pairs) == 2L)
+    assert(GraphXOracles.triangleCount(spark, pairs) == 2L)
+  }
+
+  test("triangles TVF on non-canonical pairs == GraphX TriangleCount") {
+    import spark.implicits._
+    graft.functions.TableFunctions.ensureRegistered(spark)
+    // K4 on {1,2,3,4} (4 triangles) + triangle {5,6,7} + the pendant 7-8,
+    // written with reversed duplicates, repeated pairs and self-loops:
+    // the undirected simple graph has 5 triangles
+    val undirected = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
+      (3L, 4L), (5L, 6L), (6L, 7L), (5L, 7L), (7L, 8L))
+    val noisy = undirected ++ undirected.take(4).map(_.swap) ++
+      Seq((6L, 5L), (3L, 4L), (3L, 4L), (2L, 2L), (8L, 8L), (9L, 9L))
+    noisy.toDF("a", "b").createOrReplaceTempView("tvf_noisy_pairs")
+    val got = spark.sql(
+      "SELECT * FROM triangles('tvf_noisy_pairs', 'a', 'b')").head().getLong(0)
+    val want = GraphXOracles.triangleCount(spark,
+      noisy.toDF("x", "y"))
+    assert(want == 5L && got == want, s"TVF $got vs GraphX $want")
   }
 
   test("multiSourceBfs == per-seed bfsDepthsDF") {

@@ -419,6 +419,21 @@ class RandomizedSpec extends SparkSpecBase {
         .removed(seed)
       assert(gotFast == wantFast, s"trial $trial fastest: $gotFast vs $wantFast")
 
+      // earliest arrival from the seed present at seedTs: min arrival
+      // over journeys whose first edge leaves at or after seedTs; the
+      // seed keeps seedTs (every edge here arrives after it leaves)
+      val seedTs = 3L * trial
+      val wantEa = (js.toSeq.flatMap { case (v, j) =>
+          j.filter(_.start >= seedTs).map(x => v -> x.arrive) } :+
+        (seed -> seedTs)).groupMapReduce(_._1)(_._2)(math.min)
+      def arrivals(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val gotEa = arrivals(Graphs.earliestArrival(spark, df, seed, seedTs,
+        maxHops))
+      assert(gotEa == wantEa, s"trial $trial earliest: $gotEa vs $wantEa")
+      assert(arrivals(GraphXOracles.earliestArrival(spark, df, seed, seedTs,
+        maxHops)) == wantEa, s"trial $trial earliest (GraphX)")
+
       // latest departure to a random reachable target: max start over
       // journeys arriving by the deadline — plus intermediate vertices'
       // own latest feasible departure, checked by re-enumeration per v
@@ -444,6 +459,9 @@ class RandomizedSpec extends SparkSpecBase {
             maxHops)
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         assert(got == want, s"trial $trial latest: $got vs $want")
+        assert(GraphXOracles.latestDeparture(spark, df, target, deadline,
+            maxHops).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+          == want, s"trial $trial latest (GraphX)")
       }
     }
   }

@@ -904,9 +904,13 @@ class StreamingSpec extends SparkSpecBase {
     val (seedId, seedUser, seedUs) =
       (seedRow.getLong(0), seedRow.getLong(1), seedRow.getLong(2))
 
-    val batchOracle = graft.ops.Graphs.earliestArrival(spark,
+    val batchOracle = GraphXOracles.earliestArrival(spark,
         edges.drop("user_id"), seedId, seedUs, maxHops = 1000)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // the engine's DataFrame frontier agrees with the Pregel twin
+    assert(graft.ops.Graphs.earliestArrival(spark, edges.drop("user_id"),
+        seedId, seedUs, maxHops = 1000)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == batchOracle)
 
     // stream the edges in global (avail, src) order over 4 micro-batches —
     // per-user time order is preserved by the global sort

@@ -249,7 +249,7 @@ class ToleranceSpec extends SparkSpecBase {
 
   test("g08 pagerank: ranks positive, mass ≈ vertex count") {
     val edges = graft.ops.Graphs.supplyEdges(spark, sfDir).select("src", "dst")
-    val full = graft.ops.Graphs.pageRank(spark, edges, 10)
+    val full = GraphXOracles.pageRank(spark, edges, 10)
     val nVerts = edges.select(col("src").as("id"))
       .unionAll(edges.select(col("dst").as("id"))).distinct().count()
     val stats = full.agg(sum("rank"), min("rank"), count(lit(1))).head()
@@ -271,7 +271,7 @@ class ToleranceSpec extends SparkSpecBase {
       .select("src", "dst").localCheckpoint()
     val twin = graft.ops.Graphs.pageRankDF(spark, edges, 10)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val gx = graft.ops.Graphs.pageRank(spark, edges, 10)
+    val gx = GraphXOracles.pageRank(spark, edges, 10)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(gx.keySet == twin.keySet)
     // top-20 rank ORDER must agree exactly, values within 1e-6
@@ -290,7 +290,7 @@ class ToleranceSpec extends SparkSpecBase {
     val seed = graft.ops.Graphs.CUST + 1L
     val twin = graft.ops.Graphs.personalizedPageRankDF(spark, edges, seed, 10)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val gx = graft.ops.Graphs.personalizedPageRank(spark, edges, seed, 10)
+    val gx = GraphXOracles.personalizedPageRank(spark, edges, seed, 10)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(gx.keySet == twin.keySet)
     assert(math.abs(twin.values.sum - 1.0) < 1e-9)
