@@ -139,6 +139,9 @@ object Bench {
     val pqQuery = vecs.filter(col("vec_id") === 0)
       .select("embedding").head().getSeq[Float](0)
 
+    // b14's cached edge list (plan-equal across its runs, so one cache
+    // entry), released after its timed runs
+    var b14Edges: org.apache.spark.sql.DataFrame = null
     val signature: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
       "b11_asof_merge" -> (() =>
         AsOfJoin.merge(asofL, asofR, Seq("user_id"), "ts", "ts",
@@ -175,9 +178,9 @@ object Bench {
       // canary for the whole iterative family (CC/LPA/SCC share the
       // loop discipline).
       "b14_pagerank" -> (() => {
-        val e = graft.ops.Graphs.supplyEdges(spark, sfDir)
+        b14Edges = graft.ops.Graphs.supplyEdges(spark, sfDir)
           .select("src", "dst").cache()
-        graft.ops.Graphs.pageRankDF(spark, e, 10, materialize = false)
+        graft.ops.Graphs.pageRankDF(spark, b14Edges, 10, materialize = false)
       }))
 
     def once(mk: () => org.apache.spark.sql.DataFrame): (Double, Int) = {
@@ -213,7 +216,7 @@ object Bench {
         case e: Throwable =>
           System.err.println(s"[bench] $bid failed: ${e.getMessage}")
           (bid, -1.0, 0, Seq.empty[Double])
-      }
+      } finally if (b14Edges != null) { b14Edges.unpersist(); b14Edges = null }
     }
     def f(v: Double): String = f"$v%.4f"
     val qs = results.map { case (k, v, _, _) => s""""$k":${f(v)}""" }

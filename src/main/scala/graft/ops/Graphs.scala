@@ -810,8 +810,8 @@ object Graphs {
     * using <= maxRounds edges); the default runs to the fix point, which
     * non-negative weights reach after at most |V|-1 rounds. The frontier
     * broadcast decision is adaptive, as in [[bfsDepthsDF]]: the improved
-    * set is materialized per round for the termination test, so its count
-    * is free.
+    * set is cut per round, and its size (the termination test and the
+    * broadcast switch) is observed on that cut's own job.
     *
     * At 100 TB: per-round shuffle is the dst-min aggregation, O(edges out
     * of the frontier); `dist` stays partitioned on id, and bucketing the
@@ -838,12 +838,12 @@ object Graphs {
       val cand = e.join(probe, "src")
         .select(col("dst").as("id"), (col("sd") + col("weight")).as("cand"))
         .groupBy("id").agg(min(col("cand")).as("cand"))
-      frontier = cand.join(dist.withColumnRenamed("dist", "old"),
-          Seq("id"), "left_outer")
-        .filter(col("old").isNull || col("cand") < col("old"))
-        .select(col("id"), col("cand").as("dist"))
-        .transform(Checkpoints.cut)
-      frontierRows = frontier.count()
+      val (next, nextRows) = Checkpoints.cutCounted(
+        cand.join(dist.withColumnRenamed("dist", "old"), Seq("id"), "left_outer")
+          .filter(col("old").isNull || col("cand") < col("old"))
+          .select(col("id"), col("cand").as("dist")))
+      frontier = next
+      frontierRows = nextRows
       if (frontierRows > 0) dist = dist
         .join(frontier.withColumnRenamed("dist", "nd"), Seq("id"), "full_outer")
         .select(col("id"),
@@ -895,22 +895,47 @@ object Graphs {
     cutSig(edges.select(col("src").cast("long"), col("dst").cast("long"))
       .filter(col("src") =!= col("dst")).distinct())
 
-  /** Union-find over the cut edge list `e` of `n` rows, on the driver.
-    * Ids sit in a sorted primitive array and the forest is an Int parent
-    * array over their positions; every link points the larger root at the
-    * smaller, so each root is its component's minimum id.
-    */
+  /** Union-find over the cut edge list `e` of `n` rows, on the driver. */
   private def unionFindCC(s: SparkSession, e: DataFrame, n: Long)
       : DataFrame = {
-    // endpoints in edge order: ends(2i), ends(2i+1) is edge i
-    val ends = {
-      val rows = e.collect()
-      require(rows.length == n,
-        s"connectedComponentsDF: collected ${rows.length} edges, cut had $n")
-      rows.flatMap(r => Array(r.getLong(0), r.getLong(1)))
+    val rows = e.collect()
+    require(rows.length == n,
+      s"connectedComponentsDF: collected ${rows.length} edges, cut had $n")
+    val (ids, labels) =
+      unionFind(rows.flatMap(r => Array(r.getLong(0), r.getLong(1))))
+    import s.implicits._
+    ids.indices.map(j => (ids(j), labels(j))).toDF("id", "component")
+  }
+
+  /** Connected components of the pairs in `ends` (ends(2i), ends(2i+1) is
+    * pair i), on the driver: the distinct endpoints, sorted, and each
+    * one's label. The forest is an Int parent array over the ids'
+    * positions; every link points the larger root at the smaller, so each
+    * label is its component's minimum id. A pair of equal ids links
+    * nothing but still names its id.
+    */
+  private[graft] def unionFind(ends: Array[Long]): (Array[Long], Array[Long]) = {
+    val ids = sortedDistinct(ends)
+    val parent = Array.tabulate(ids.length)(identity)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
     }
-    val m = ends.length / 2
-    val ids = ends.clone()
+    def pos(id: Long): Int = java.util.Arrays.binarySearch(ids, id)
+    var i = 0
+    while (i < ends.length / 2) {
+      val a = find(pos(ends(2 * i)))
+      val b = find(pos(ends(2 * i + 1)))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+      i += 1
+    }
+    (ids, Array.tabulate(ids.length)(j => ids(find(j))))
+  }
+
+  /** The distinct values of `a`, sorted, in a new array. */
+  private[graft] def sortedDistinct(a: Array[Long]): Array[Long] = {
+    val ids = a.clone()
     java.util.Arrays.sort(ids)
     var k = 0
     var i = 0
@@ -918,22 +943,7 @@ object Graphs {
       if (k == 0 || ids(i) != ids(k - 1)) { ids(k) = ids(i); k += 1 }
       i += 1
     }
-    val parent = Array.tabulate(k)(identity)
-    def find(x: Int): Int = {
-      var r = x
-      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
-      r
-    }
-    def pos(id: Long): Int = java.util.Arrays.binarySearch(ids, 0, k, id)
-    i = 0
-    while (i < m) {
-      val a = find(pos(ends(2 * i)))
-      val b = find(pos(ends(2 * i + 1)))
-      if (a < b) parent(b) = a else if (b < a) parent(a) = b
-      i += 1
-    }
-    import s.implicits._
-    (0 until k).map(j => (ids(j), ids(find(j)))).toDF("id", "component")
+    java.util.Arrays.copyOf(ids, k)
   }
 
   /** Connected components as alternating large-star / small-star rounds,
@@ -2508,12 +2518,10 @@ object Graphs {
     val e = edges.select(col("src").cast("long"), col("dst").cast("long"),
         col("dep_us").cast("long"), col("arr_us").cast("long"))
       .transform(Checkpoints.cut)
-    var labels = seeds.select(col("id").cast("long"),
-        col("arr_us").cast("long")).distinct()
-      .transform(Checkpoints.cut)
+    var (labels, rows) = Checkpoints.cutCounted(seeds.select(
+      col("id").cast("long"), col("arr_us").cast("long")).distinct())
     var frontier = labels
     var hop = 1
-    var rows = frontier.count()
     while (hop < maxHops && rows > 0) {
       hop += 1
       // adaptive frontier broadcast (the bfsDepthsDF discipline): the
@@ -2530,9 +2538,10 @@ object Graphs {
           col("dep_us") <= col("f_arr") + deltaUs)
         .select(col("dst").as("id"), col("arr_us"))
         .distinct()
-      frontier = expanded.join(labels, Seq("id", "arr_us"), "left_anti")
-        .transform(Checkpoints.cut)
-      rows = frontier.count()
+      val (next, nextRows) = Checkpoints.cutCounted(
+        expanded.join(labels, Seq("id", "arr_us"), "left_anti"))
+      frontier = next
+      rows = nextRows
       if (rows > 0)
         labels = labels.unionAll(frontier).transform(Checkpoints.cut)
     }

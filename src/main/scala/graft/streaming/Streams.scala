@@ -395,32 +395,114 @@ object Streams {
     * graph ingestion's core maintenance problem. The merge works on the
     * QUOTIENT graph: each batch edge (u, v) becomes an edge between the
     * endpoints' CURRENT components (new vertices start as their own),
-    * CC runs on that super-edge list — sized by the BATCH, not the graph,
-    * so union-find on the driver ([[graft.ops.Graphs.connectedComponentsDF]])
-    * up to its broadcast bound — and the resulting `old comp → merged comp`
-    * map (≤ 2·|batch| rows, broadcast) relabels the full table in one
-    * join. Correct because existing labels already quotient all prior
-    * edges, so CC(labels ∪ batch) = CC over the quotient; the min-id
-    * label invariant survives (min of merged mins = merged min).
-    * Re-applying a batch is a natural no-op (merging merged components
-    * changes nothing) — idempotence for free, asserted in StreamingSpec.
+    * CC runs on that super-edge list — sized by the BATCH, not the graph
+    * — and the resulting `old comp → merged comp` map (≤ 2·|batch| rows,
+    * broadcast) relabels the full table in one join. Correct because
+    * existing labels already quotient all prior edges, so CC(labels ∪
+    * batch) = CC over the quotient; the min-id label invariant survives
+    * (min of merged mins = merged min). Re-applying a batch is a natural
+    * no-op (merging merged components changes nothing) — idempotence for
+    * free, asserted in StreamingSpec.
+    *
+    * The path is chosen by the batch's size (see [[ccApplyBatchPlan]]);
+    * either way the next table is cut here, once.
     */
   def ccApplyBatch(s: org.apache.spark.sql.SparkSession, labels: DataFrame,
       edges: DataFrame): DataFrame =
     ccApplyBatchPlan(s, labels, edges).transform(graft.ops.Checkpoints.cut)
 
-  /** [[ccApplyBatch]] WITHOUT the terminal lineage cut — exposed so the
-    * plan-shape gate (StreamingSpec) can assert the relabel read's
-    * Exchange budget on the pre-cut plan; production callers use
-    * [[ccApplyBatch]]. The batch-sized intermediates (batch nodes, their
-    * label lookup, the quotient edges) are still cut eagerly here, each
-    * once, and their sizes are observed on those cuts' jobs: a batch
-    * that merges nothing runs no count or emptiness job of its own.
+  /** [[ccApplyBatch]] WITHOUT the terminal lineage cut, choosing the path
+    * from the batch's non-loop edge count:
+    *  - at most [[graft.ops.Graphs.FrontierBroadcastRows]] edges (one
+    *    bounded `limit(bound + 1)` collect tells, and returns them; a
+    *    local frame — how a stream delivers a batch — runs no job for
+    *    it): the quotient is built and unioned on the driver
+    *    ([[graft.ops.Graphs.unionFind]], the union-find of
+    *    `connectedComponentsDF`), after ONE collect of the endpoints'
+    *    labels (`labels ⋉ broadcast(batch ids)`: the table is only
+    *    scanned). The result is `labels ∪ fresh ids` with their merged
+    *    labels, joined to a broadcast remap only when a known component
+    *    merges. A local batch's fold runs 3 jobs with the terminal cut —
+    *    the lookup's broadcast build, its collect, the table cut — and
+    *    one more (the remap's broadcast) when components merge;
+    *  - above it: [[ccApplyBatchDistributed]].
     */
-  private[graft] def ccApplyBatchPlan(s: org.apache.spark.sql.SparkSession,
+  private def ccApplyBatchPlan(s: org.apache.spark.sql.SparkSession,
       labels: DataFrame, edges: DataFrame): DataFrame = {
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
+    val e = nonLoopEdges(edges)
+    val bound = graft.ops.Graphs.FrontierBroadcastRows
+    val rows = e.limit(bound.toInt + 1).collect()
+    if (rows.length > bound) ccApplyBatchDistributed(s, labels, edges)
+    else ccFoldOnDriver(s, labels,
+      rows.flatMap(r => Array(r.getLong(0), r.getLong(1))))
+  }
+
+  private def nonLoopEdges(edges: DataFrame): DataFrame =
+    edges.select(col("src").cast("long"), col("dst").cast("long"))
       .filter(col("src") =!= col("dst"))
+
+  /** The driver fold of [[ccApplyBatchPlan]] over the batch's non-loop
+    * edges `ends` (ends(2i), ends(2i+1) is edge i), uncut.
+    */
+  private def ccFoldOnDriver(s: org.apache.spark.sql.SparkSession,
+      labels: DataFrame, ends: Array[Long]): DataFrame = {
+    import s.implicits._
+    import java.util.Arrays.binarySearch
+    val ids = graft.ops.Graphs.sortedDistinct(ends)
+    // each batch id's current component; a fresh id is its own
+    val comp = ids.clone()
+    val known = new Array[Boolean](ids.length)
+    if (ids.nonEmpty)
+      labels.select(col("id").cast("long"), col("component").cast("long"))
+        .join(broadcast(ids.toSeq.toDF("id")), Seq("id"), "left_semi")
+        .collect().foreach { r =>
+          val j = binarySearch(ids, r.getLong(0))
+          comp(j) = r.getLong(1)
+          known(j) = true
+        }
+    // the quotient edges: each batch edge between its endpoints'
+    // components, loops (an edge inside one component) dropped
+    val quotient = Array.newBuilder[Long]
+    var i = 0
+    while (i < ends.length) {
+      val a = comp(binarySearch(ids, ends(i)))
+      val b = comp(binarySearch(ids, ends(i + 1)))
+      if (a != b) { quotient += a; quotient += b }
+      i += 2
+    }
+    val (qIds, qRoots) = graft.ops.Graphs.unionFind(quotient.result())
+    def root(c: Long): Long = {
+      val j = binarySearch(qIds, c)
+      if (j >= 0) qRoots(j) else c
+    }
+    def fresh(c: Long): Boolean = {
+      val j = binarySearch(ids, c)
+      j >= 0 && !known(j)
+    }
+    // fresh ids enter with their merged labels, so only a known
+    // component whose root moved needs the relabel join
+    val added = ids.indices.filterNot(known).map(j => (ids(j), root(ids(j))))
+      .toDF("id", "component")
+    val remap = qIds.indices
+      .filter(j => qRoots(j) != qIds(j) && !fresh(qIds(j)))
+      .map(j => (qIds(j), qRoots(j)))
+    val all = foldUnion(labels, labels, added)
+    if (remap.isEmpty) all else relabel(all, remap.toDF("component", "__new"))
+  }
+
+  /** The distributed fold of [[ccApplyBatchPlan]], for batches above the
+    * driver bound (tests call it directly to pin it on small batches),
+    * WITHOUT the terminal cut — so the plan-shape gate (StreamingSpec)
+    * can assert the relabel read's Exchange budget. The batch-sized
+    * intermediates (batch nodes, their label lookup, the quotient edges)
+    * are cut eagerly here, each once, and their sizes are observed on
+    * those cuts' jobs; the quotient CC is
+    * [[graft.ops.Graphs.connectedComponentsDF]].
+    */
+  private[graft] def ccApplyBatchDistributed(
+      s: org.apache.spark.sql.SparkSession, labels: DataFrame,
+      edges: DataFrame): DataFrame = {
+    val e = nonLoopEdges(edges)
     // cut once: the distinct runs in the cut's job, which also reports
     // the row count the broadcast hints key on — no separate count job
     val (nodes, nodeRows) = graft.ops.Checkpoints.cutCounted(
@@ -464,11 +546,16 @@ object Streams {
         .filter(col("id") =!= col("component"))
         .select(col("id").as("component"), col("component").as("__new"))
     val all = foldUnion(labels, labels, newIds)
-    if (remap == null) all
-    else all.join(broadcast(remap), Seq("component"), "left")
+    if (remap == null) all else relabel(all, remap)
+  }
+
+  /** `table` with each component moved along the (component, __new)
+    * `remap`, which is batch-sized and broadcast.
+    */
+  private def relabel(table: DataFrame, remap: DataFrame): DataFrame =
+    table.join(broadcast(remap), Seq("component"), "left")
       .select(col("id"),
         coalesce(col("__new"), col("component")).as("component"))
-  }
 
   /** `kept ∪ added` as the next maintained label table, coalesced to
     * at most max(partitions of `labels`, spark.sql.shuffle.partitions):

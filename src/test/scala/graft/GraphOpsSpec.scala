@@ -208,6 +208,20 @@ class GraphOpsSpec extends SparkSpecBase {
     val (bfs, _) = actions(Graphs.bfsDepthsDF(spark,
       edges.select("src", "dst"), 1L, maxDepth = 8).collect())
     assert(bfs.length == 5)
+    // the edge and seed cuts, then a frontier cut and a distance cut per
+    // improving round; the fifth round's empty frontier ends the loop
+    val (wd, wdCuts) = actions(Graphs.weightedDistancesDF(spark,
+      edges.select($"src", $"dst", $"avail_us".as("weight")),
+      1L).collect())
+    assert(wdCuts == 2 + 2 * 4 + 1 && wd.length == 5, wd.toSeq)
+    // the edge and seed-label cuts, then per hop a frontier cut and a
+    // label cut; the sixth hop's empty frontier ends the loop
+    val (ra, raCuts) = actions(Graphs.restlessEarliestArrival(spark,
+      edges.select($"src", $"dst", $"avail_us".as("dep_us"),
+        $"arrive_us".as("arr_us")),
+      Seq((1L, 0L)).toDF("id", "arr_us"), deltaUs = 100L, maxHops = 8)
+      .collect())
+    assert(raCuts == 2 + 2 * 4 + 1 && ra.length == 5, ra.toSeq)
   }
 
   test("src/main has no GraphX: graph kernels are DataFrame frontiers, " +

@@ -1059,7 +1059,7 @@ class StreamingSpec extends SparkSpecBase {
     val labels = (0L until 500L).map(i => (i, i / 5 * 5)).toDF("id", "component")
       .transform(graft.ops.Checkpoints.cut)
     val batch = Seq((1L, 600L), (600L, 601L), (7L, 12L)).toDF("src", "dst")
-    val out = Streams.ccApplyBatchPlan(spark, labels, batch)
+    val out = Streams.ccApplyBatchDistributed(spark, labels, batch)
     out.write.format("noop").mode("overwrite").save()
     val shuffles = out.queryExecution.executedPlan.collect {
       case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
@@ -1432,18 +1432,69 @@ class StreamingSpec extends SparkSpecBase {
     // the quotient edge list is empty and no CC runs
     val batch = Seq((1L, 2L), (6L, 9L), (14L, 10L)).toDF("src", "dst")
     val (out, jobs) = jobSites(Streams.ccApplyBatch(spark, labels, batch))
-    val sites = jobs.map(_._1)
-    assert(!sites.exists(_.matches("(count|isEmpty) at Streams\\.scala:.*")),
-      sites)
-    // the batch sizes come from the cuts' own jobs: every job serves a cut
-    // (its own, or the broadcast build of a batch-side probe)
-    assert(sites.nonEmpty && sites.forall(_.contains(" at Checkpoints.scala:")),
-      sites)
-    // 8 jobs: the node cut; the lookup cut and its two broadcast builds;
-    // the quotient-edge cut and its two endpoint broadcasts; the table cut
-    assert(jobs.length <= 8, sites)
+    // the local batch is read without a job; then exactly the lookup's
+    // broadcast build, the lookup collect and the table cut
+    assert(jobs.map(_._1.takeWhile(_ != ':')) == Seq(
+      "collect at Streams.scala", "collect at Streams.scala",
+      "localCheckpoint at Checkpoints.scala"), jobs)
+    assert(jobs(0)._2 == jobs(1)._2 && jobs(1)._2 != jobs(2)._2, jobs)
     assert(out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
       (0L until 500L).map(i => i -> i / 5 * 5).toMap)
+  }
+
+  test("quotient fold paths agree: driver fold == distributed fold == " +
+      "union-find, on merging, fresh, looped, repeated and extreme-id " +
+      "batches; replays are no-ops") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(61)
+    // sorted (id, component) rows: a duplicated id would show
+    def rows(df: DataFrame) = df.collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).sorted.toSeq
+    def state(edges: Seq[(Long, Long)]) =
+      unionFindLabels(edges).toSeq.toDF("id", "component")
+        .transform(graft.ops.Checkpoints.cut)
+    def driver(l: DataFrame, b: Seq[(Long, Long)]) =
+      Streams.ccApplyBatch(spark, l, b.toDF("src", "dst"))
+    def distributed(l: DataFrame, b: Seq[(Long, Long)]) =
+      Streams.ccApplyBatchDistributed(spark, l, b.toDF("src", "dst"))
+        .transform(graft.ops.Checkpoints.cut)
+    def check(prior: Seq[(Long, Long)], batch: Seq[(Long, Long)],
+        what: String): Unit = {
+      val want = unionFindLabels(prior ++ batch).toSeq.sorted
+      val labels = state(prior)
+      for ((path, fold) <- Seq("driver" -> (driver _),
+          "distributed" -> (distributed _))) {
+        val once = fold(labels, batch)
+        assert(rows(once) == want, s"$what: $path")
+        assert(rows(fold(once, batch)) == want, s"$what: $path replay")
+      }
+    }
+    val extremes = Seq(Long.MinValue, Long.MinValue + 1, Long.MaxValue, -7L)
+    def id(): Long =
+      if (rnd.nextInt(8) == 0) extremes(rnd.nextInt(extremes.length))
+      else rnd.nextInt(60).toLong - 20
+    for (trial <- 1 to 6) {
+      val prior = Seq.fill(5 + rnd.nextInt(25))((id(), id()))
+      val fresh = Seq.fill(3)((id(), id()))
+      // self-loops (one on an id no other edge names), duplicate and
+      // reversed edges
+      val batch = fresh ++ fresh.take(2) ++ fresh.take(2).map(_.swap) ++
+        Seq((prior.head._1, prior.head._1), (1000L + trial, 1000L + trial))
+      check(prior, batch ++ Seq.fill(rnd.nextInt(8))((id(), id())),
+        s"trial $trial")
+    }
+    val prior = Seq((1L, 2L), (2L, 3L), (10L, 11L), (Long.MinValue, 12L),
+      (Long.MaxValue, 13L))
+    // only known ids: inside one component, then merging three
+    check(prior, Seq((3L, 1L), (11L, 10L)), "known ids, no merge")
+    check(prior, Seq((3L, 11L), (13L, 10L), (12L, 2L)), "known ids, merges")
+    // fresh ids alone, and fresh ids linking known components
+    check(prior, Seq((50L, 51L), (-50L, 50L)), "fresh ids alone")
+    check(prior, Seq((60L, 3L), (60L, Long.MaxValue)), "fresh link")
+    // the empty batch, a loops-only batch, and an empty state
+    check(prior, Seq.empty, "empty batch")
+    check(prior, Seq((1L, 1L), (70L, 70L)), "loops only")
+    check(Seq.empty, Seq((5L, 4L), (4L, 3L), (8L, 9L)), "empty state")
   }
 
   test("maintained CC label table keeps a bounded partition count over " +
@@ -1501,14 +1552,15 @@ class StreamingSpec extends SparkSpecBase {
       ins.toDF("src", "dst"), bridge.toDF("src", "dst")))
     val sites = jobs.map(_._1.takeWhile(_ != ':'))
     assert(!sites.contains("count at Graphs.scala"), jobs)
-    // each CC is one edge cut and one collect
-    assert(sites.count(_ == "collect at Graphs.scala") == 2, jobs)
-    // the cuts are the fold's own nine (deletes, live', touched ids,
-    // labels', live; batch nodes, lookup, quotient edges, table) plus each
-    // CC's edge cut: a contraction round or vertex cut would add more
+    // the recolour's CC is one edge cut and one collect; the insert
+    // fold's quotient is unioned on the driver after its lookup collect
+    assert(sites.count(_ == "collect at Graphs.scala") == 1, jobs)
+    // the cuts are the fold's own six (deletes, live', touched ids,
+    // labels', live; the insert fold's table) plus the recolour CC's edge
+    // cut: a contraction round or vertex cut would add more
     val cutActions = jobs.filter(_._1.startsWith("localCheckpoint at " +
       "Checkpoints.scala:")).map(_._2).distinct
-    assert(cutActions.length == 11, jobs)
+    assert(cutActions.length == 7, jobs)
     assert(got.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
       unionFindLabels(tri1 ++ tri2 ++ far ++ ins))
   }
