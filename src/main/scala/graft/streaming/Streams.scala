@@ -1,8 +1,9 @@
 package graft.streaming
 
 import graft.Det
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, ListState, MapState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
 /** Streaming surface (SURVEY.md §2.4 S01–S07), written as UNIFIED
@@ -416,11 +417,11 @@ object Streams {
     *  - at most [[graft.ops.Graphs.FrontierBroadcastRows]] edges (one
     *    bounded `limit(bound + 1)` collect tells, and returns them; a
     *    local frame — how a stream delivers a batch — runs no job for
-    *    it): the quotient is built and unioned on the driver
-    *    ([[graft.ops.Graphs.unionFind]], the union-find of
-    *    `connectedComponentsDF`), after ONE collect of the endpoints'
-    *    labels (`labels ⋉ broadcast(batch ids)`: the table is only
-    *    scanned). The result is `labels ∪ fresh ids` with their merged
+    *    it): [[ccFoldOnDriver]] with no deletes builds the quotient and
+    *    unions it on the driver ([[graft.ops.Graphs.unionFind]], the
+    *    union-find of `connectedComponentsDF`), after ONE collect of the
+    *    endpoints' labels (`labels ⋉ broadcast(batch ids)`: the table is
+    *    only scanned). The result is `labels ∪ fresh ids` with their merged
     *    labels, joined to a broadcast remap only when a known component
     *    merges. A local batch's fold runs 3 jobs with the terminal cut —
     *    the lookup's broadcast build, its collect, the table cut — and
@@ -428,66 +429,143 @@ object Streams {
     *  - above it: [[ccApplyBatchDistributed]].
     */
   private def ccApplyBatchPlan(s: org.apache.spark.sql.SparkSession,
-      labels: DataFrame, edges: DataFrame): DataFrame = {
-    val e = nonLoopEdges(edges)
-    val bound = graft.ops.Graphs.FrontierBroadcastRows
-    val rows = e.limit(bound.toInt + 1).collect()
-    if (rows.length > bound) ccApplyBatchDistributed(s, labels, edges)
-    else ccFoldOnDriver(s, labels,
-      rows.flatMap(r => Array(r.getLong(0), r.getLong(1))))
-  }
+      labels: DataFrame, edges: DataFrame): DataFrame =
+    boundedEnds(nonLoopEdges(edges)) match {
+      case Some(ends) =>
+        ccFoldOnDriver(s, labels, ends, Array.emptyLongArray, null).get
+      case None => ccApplyBatchDistributed(s, labels, edges)
+    }
 
   private def nonLoopEdges(edges: DataFrame): DataFrame =
     edges.select(col("src").cast("long"), col("dst").cast("long"))
       .filter(col("src") =!= col("dst"))
 
-  /** The driver fold of [[ccApplyBatchPlan]] over the batch's non-loop
-    * edges `ends` (ends(2i), ends(2i+1) is edge i), uncut.
+  /** The (src, dst) rows of `pairs` as ends (ends(2i), ends(2i+1) is pair
+    * i) by one bounded `limit(bound + 1)` collect, or None above
+    * [[graft.ops.Graphs.FrontierBroadcastRows]] rows. A local frame — how
+    * a stream delivers a batch — runs no job for it.
+    */
+  private def boundedEnds(pairs: DataFrame): Option[Array[Long]] = {
+    val bound = graft.ops.Graphs.FrontierBroadcastRows
+    val rows = pairs.limit(bound.toInt + 1).collect()
+    if (rows.length > bound) None
+    else Some(rows.flatMap(r => Array(r.getLong(0), r.getLong(1))))
+  }
+
+  /** A local frame of the long columns `names` holding `rows`, each
+    * column nullable only when a row holds a null there. An explicit
+    * schema, because deriving a tuple encoder by reflection (`toDF`)
+    * costs a batch-sized fold more than building its rows does.
+    */
+  private def longFrame(s: org.apache.spark.sql.SparkSession, rows: Seq[Row],
+      names: String*): DataFrame =
+    s.createDataFrame(java.util.Arrays.asList(rows: _*),
+      StructType(names.indices.map(i => StructField(names(i), LongType,
+        nullable = rows.exists(_.isNullAt(i))))))
+
+  /** The driver fold of a batch of non-loop inserts `ins` and deletes
+    * `del` (both as ends), uncut: the next label table, or None when the
+    * live edges of the components the deletes touch exceed the driver
+    * bound. `live` is read only when a delete touches a component.
+    *  1. one collect of `labels ⋉ broadcast(batch ids)` fetches every
+    *     batch id's current label; the delete endpoints' labels are the
+    *     touched components;
+    *  2. [[carve]] brings back the touched components' surviving edges,
+    *     and union-find recolours them — a vertex left without edges
+    *     drops out;
+    *  3. the quotient edges (each insert between its endpoints' labels
+    *     after step 2; a fresh id is its own, loops dropped) are unioned
+    *     with min-id roots, so the min-id invariant holds;
+    *  4. the table is `labels` with the touched components dropped and
+    *     the merged untouched ones relabelled (one broadcast join, only
+    *     when some component moves), plus the recoloured ids and the
+    *     inserts' fresh ids, each with its merged label.
     */
   private def ccFoldOnDriver(s: org.apache.spark.sql.SparkSession,
-      labels: DataFrame, ends: Array[Long]): DataFrame = {
-    import s.implicits._
+      labels: DataFrame, ins: Array[Long], del: Array[Long],
+      live: DataFrame): Option[DataFrame] = {
     import java.util.Arrays.binarySearch
-    val ids = graft.ops.Graphs.sortedDistinct(ends)
-    // each batch id's current component; a fresh id is its own
-    val comp = ids.clone()
+    import graft.ops.Graphs.{sortedDistinct, unionFind}
+    val ids = sortedDistinct(ins ++ del)
+    // each batch id's current component, when the table has one
+    val comp = new Array[Long](ids.length)
     val known = new Array[Boolean](ids.length)
     if (ids.nonEmpty)
       labels.select(col("id").cast("long"), col("component").cast("long"))
-        .join(broadcast(ids.toSeq.toDF("id")), Seq("id"), "left_semi")
+        .join(broadcast(longFrame(s, ids.map(Row(_)).toSeq, "id")), Seq("id"),
+          "left_semi")
         .collect().foreach { r =>
           val j = binarySearch(ids, r.getLong(0))
           comp(j) = r.getLong(1)
           known(j) = true
         }
-    // the quotient edges: each batch edge between its endpoints'
-    // components, loops (an edge inside one component) dropped
-    val quotient = Array.newBuilder[Long]
-    var i = 0
-    while (i < ends.length) {
-      val a = comp(binarySearch(ids, ends(i)))
-      val b = comp(binarySearch(ids, ends(i + 1)))
-      if (a != b) { quotient += a; quotient += b }
-      i += 2
+    val touched = sortedDistinct(
+      del.map(binarySearch(ids, _)).filter(known(_)).map(comp(_)))
+    def untouched(j: Int): Boolean =
+      known(j) && binarySearch(touched, comp(j)) < 0
+    val recoloured =
+      if (touched.isEmpty) Some(Array.emptyLongArray)
+      else carve(s, labels, live, touched, del)
+    recoloured.map { ends =>
+      val (rIds, rRoots) = unionFind(ends)
+      // a batch id's label once the deletes are applied, if it keeps one
+      def after(v: Long): Option[Long] = {
+        val r = binarySearch(rIds, v)
+        val j = binarySearch(ids, v)
+        if (r >= 0) Some(rRoots(r))
+        else if (untouched(j)) Some(comp(j))
+        else None
+      }
+      val quotient = Array.newBuilder[Long]
+      var i = 0
+      while (i < ins.length) {
+        val a = after(ins(i)).getOrElse(ins(i))
+        val b = after(ins(i + 1)).getOrElse(ins(i + 1))
+        if (a != b) { quotient += a; quotient += b }
+        i += 2
+      }
+      val (qIds, qRoots) = unionFind(quotient.result())
+      def root(c: Long): Long = {
+        val j = binarySearch(qIds, c)
+        if (j >= 0) qRoots(j) else c
+      }
+      val fresh = sortedDistinct(ins).filter(after(_).isEmpty)
+      val added = longFrame(s,
+        rIds.indices.map(j => Row(rIds(j), root(rRoots(j)))) ++
+          fresh.map(v => Row(v, root(v))), "id", "component")
+      // a touched component leaves the table (its ids re-enter through
+      // `added`); an untouched one that merged moves to its root
+      val moves = touched.map(c => Row(c, null)) ++
+        sortedDistinct(ids.indices.filter(untouched).map(comp(_)).toArray)
+          .filter(c => root(c) != c).map(c => Row(c, root(c)))
+      val kept = if (moves.isEmpty) labels
+        else relabel(labels, longFrame(s, moves.toSeq, "component", "__new"))
+      foldUnion(labels, kept, added)
     }
-    val (qIds, qRoots) = graft.ops.Graphs.unionFind(quotient.result())
-    def root(c: Long): Long = {
-      val j = binarySearch(qIds, c)
-      if (j >= 0) qRoots(j) else c
-    }
-    def fresh(c: Long): Boolean = {
-      val j = binarySearch(ids, c)
-      j >= 0 && !known(j)
-    }
-    // fresh ids enter with their merged labels, so only a known
-    // component whose root moved needs the relabel join
-    val added = ids.indices.filterNot(known).map(j => (ids(j), root(ids(j))))
-      .toDF("id", "component")
-    val remap = qIds.indices
-      .filter(j => qRoots(j) != qIds(j) && !fresh(qIds(j)))
-      .map(j => (qIds(j), qRoots(j)))
-    val all = foldUnion(labels, labels, added)
-    if (remap.isEmpty) all else relabel(all, remap.toDF("component", "__new"))
+  }
+
+  /** The live edges of the `touched` components (sorted ids) that survive
+    * the deletes `del` (ends), loops dropped, as ends — or None above the
+    * driver bound. ONE bounded collect of
+    * `live ⋉ broadcast(labels ⋉ broadcast(touched))` on src (an edge
+    * never crosses components); the carve is gathered into one partition
+    * first, so the bounded collect is one job, not a scale-up series.
+    */
+  private def carve(s: org.apache.spark.sql.SparkSession, labels: DataFrame,
+      live: DataFrame, touched: Array[Long], del: Array[Long])
+      : Option[Array[Long]] = {
+    val verts = labels
+      .select(col("id").cast("long").as("src"), col("component").cast("long"))
+      .join(broadcast(longFrame(s, touched.map(Row(_)).toSeq, "component")),
+        Seq("component"), "left_semi")
+      .select("src")
+    boundedEnds(live.select(col("src").cast("long"), col("dst").cast("long"))
+        .join(broadcast(verts), Seq("src"), "left_semi").repartition(1))
+      .map { ends =>
+        val gone = del.grouped(2).map(p => (p(0), p(1))).toSet
+        ends.grouped(2).filter(p => p(0) != p(1) && !gone((p(0), p(1))))
+          .flatten.toArray
+      }
   }
 
   /** The distributed fold of [[ccApplyBatchPlan]], for batches above the
@@ -550,10 +628,13 @@ object Streams {
   }
 
   /** `table` with each component moved along the (component, __new)
-    * `remap`, which is batch-sized and broadcast.
+    * `remap`, which is batch-sized and broadcast; a component whose
+    * `__new` is null leaves the table.
     */
   private def relabel(table: DataFrame, remap: DataFrame): DataFrame =
-    table.join(broadcast(remap), Seq("component"), "left")
+    table.join(broadcast(remap.withColumn("__moved", lit(true))),
+        Seq("component"), "left")
+      .filter(col("__moved").isNull || col("__new").isNotNull)
       .select(col("id"),
         coalesce(col("__new"), col("component")).as("component"))
 
@@ -562,11 +643,12 @@ object Streams {
     * a plain union gains the batch's partitions on every fold, and every
     * later scan of the table would pay one task per partition ever added.
     * `labels` is the fold's input table — a lineage cut, so sizing it
-    * runs no job.
+    * runs no job (and reading its plan's RDD, not `Dataset.rdd`, plans no
+    * deserializing query either).
     */
   private def foldUnion(labels: DataFrame, kept: DataFrame,
       added: DataFrame): DataFrame = {
-    val bound = math.max(labels.rdd.getNumPartitions,
+    val bound = math.max(labels.queryExecution.toRdd.getNumPartitions,
       labels.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
     kept.unionByName(added).coalesce(bound)
   }
@@ -580,31 +662,80 @@ object Streams {
     * Exact decremental connectivity needs the surviving edges — a label
     * table alone cannot tell a redundant edge from a bridge — so the
     * maintained state grows to (labels, live edge set); the edge set is
-    * the graph the pipeline already ingests, kept checkpoint-cut and
-    * co-partitioned by src.
+    * the graph the pipeline already ingests, kept checkpoint-cut.
     *
-    * The fold is a bounded re-color, never a global recompute:
+    * The fold is a bounded re-color, never a global recompute: the
+    * components the deletes touch (the labels of their endpoints) are
+    * re-colored from their surviving live edges (an edge never crosses
+    * components, so carving by the src label is complete), vertices left
+    * edge-less drop out exactly as a from-scratch CC over the survivors
+    * drops them, untouched labels pass through, and the inserts then
+    * fold by the quotient-graph merge — delete-then-insert, equal to
+    * CC(live ∖ del ∪ ins) because CC is confluent from any correct
+    * labeling. Labels stay their components' min ids. Cost scales with
+    * the touched components' edge counts + |batch|, not the graph.
+    *
+    * The path is chosen by size, like [[ccApplyBatch]]'s:
+    *  - the deletes and the non-loop inserts each fit
+    *    [[graft.ops.Graphs.FrontierBroadcastRows]] (bounded collects; a
+    *    local frame runs no job) and so do the touched components' live
+    *    edges: the fold runs on the driver ([[ccFoldOnDriver]]) after one
+    *    label-lookup collect and one carve collect, and each table is cut
+    *    once — 2 cuts. A local batch that deletes and inserts runs 9 jobs:
+    *    the lookup's broadcast build and its collect; the carve's two
+    *    broadcast builds (touched ids, their vertices) and its collect;
+    *    each cut with the broadcast build of its batch-sized frame (the
+    *    component moves, the deletes);
+    *  - otherwise [[ccApplyDeltaDistributed]].
+    *
+    * The live table is `live ⋉anti del`, then `∪ ins, distinct` only when
+    * there are inserts: it stays a multiset while the inserts are empty,
+    * every copy of a deleted pair goes, and an edge both deleted and
+    * inserted stays live. Loop deletes apply; loop inserts are dropped.
+    * StreamingSpec pins the bridge-delete SPLIT == from-scratch CC and
+    * both paths == union-find; the s27b registry entry holds the
+    * 3-insert-batch + 1-delete-batch fold to g06's oracle over the
+    * surviving edge list.
+    */
+  def ccApplyDelta(s: org.apache.spark.sql.SparkSession, labels: DataFrame,
+      liveEdges: DataFrame, inserts: DataFrame, deletes: DataFrame)
+      : (DataFrame, DataFrame) = {
+    def frame(ends: Array[Long]) = longFrame(s,
+      ends.grouped(2).map(p => Row(p(0), p(1))).toSeq, "src", "dst")
+    val driver = for {
+      // a repeated delete changes nothing, so the deletes stay as collected
+      del <- boundedEnds(deletes.select(col("src").cast("long"),
+        col("dst").cast("long")).na.drop())
+      ins <- boundedEnds(nonLoopEdges(inserts))
+      table <- ccFoldOnDriver(s, labels, ins, del, liveEdges)
+    } yield {
+      val kept = if (del.isEmpty) liveEdges
+        else liveEdges.join(broadcast(frame(del)), Seq("src", "dst"),
+          "left_anti")
+      val live = if (ins.isEmpty) kept
+        else kept.unionByName(frame(ins)).distinct()
+      (table.transform(graft.ops.Checkpoints.cut),
+        if (del.isEmpty && ins.isEmpty) liveEdges
+        else live.transform(graft.ops.Checkpoints.cut))
+    }
+    driver.getOrElse(
+      ccApplyDeltaDistributed(s, labels, liveEdges, inserts, deletes))
+  }
+
+  /** The distributed fold of [[ccApplyDelta]], for deltas above the driver
+    * bound (tests call it directly to pin it on small deltas):
     * 1. live′ = live ∖ deletes (one left-anti join);
     * 2. touched = the components of the deleted edges' endpoints (≤
     *    2·|deletes| component ids);
-    * 3. CC re-runs ONLY on live′ edges inside touched
-    *    components (one semi join carves the subgraph — an edge never
-    *    crosses components, so filtering by the src label is complete);
-    *    vertices left edge-less by the deletes drop out, exactly as a
-    *    from-scratch CC over live′ would drop them;
-    * 4. untouched labels pass through; inserts then fold via the
-    *    quotient-graph merge ([[ccApplyBatch]]), so a batch with both
-    *    kinds applies as delete-then-insert — equal to CC(live ∪ ins ∖
-    *    del) because CC is confluent from any correct labeling.
-    * The min-id label invariant survives every step (recompute emits
-    * min-ids within the split parts; the quotient merge takes min of
-    * mins). Cost scales with the touched components' edge counts +
-    * |batch|, not the graph: the decremental analog of the quotient
-    * fold. StreamingSpec pins the bridge-delete SPLIT == from-scratch
-    * CC; the s27b registry entry holds the 3-insert-batch + 1-delete-
-    * batch fold to g06's oracle over the surviving edge list.
+    * 3. CC re-runs ONLY on live′ edges inside touched components (one
+    *    semi join carves the subgraph);
+    * 4. untouched labels pass through; inserts then fold via
+    *    [[ccApplyBatch]].
+    * Seven cuts: the deletes, live′, touched, the recolour CC's edge cut,
+    * labels′, live and the insert fold's table.
     */
-  def ccApplyDelta(s: org.apache.spark.sql.SparkSession, labels: DataFrame,
+  private[graft] def ccApplyDeltaDistributed(
+      s: org.apache.spark.sql.SparkSession, labels: DataFrame,
       liveEdges: DataFrame, inserts: DataFrame, deletes: DataFrame)
       : (DataFrame, DataFrame) = {
     val (del, delRows) = graft.ops.Checkpoints.cutCounted(
@@ -1349,7 +1480,9 @@ object Streams {
         col("dep_us").cast("long"), col("arr_us").cast("long")).distinct())
     val (live, liveRows) = graft.ops.Checkpoints.cutCounted(
       liveEdges.unionByName(eNew).distinct())
-    val cand = restlessExpand(labels, labels.count(), eNew, eNewRows,
+    // the label table's size is not known and not worth a job: it only
+    // picks the broadcast side, so the batch is broadcast when it fits
+    val cand = restlessExpand(labels, Long.MaxValue, eNew, eNewRows,
       deltaUs, maxHops)
     (restlessDrain(labels, cand, live, liveRows, deltaUs, maxHops), live)
   }

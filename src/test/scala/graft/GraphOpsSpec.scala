@@ -471,14 +471,20 @@ class GraphOpsSpec extends SparkSpecBase {
     // bridge and links 4 to the other component
     def snap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // (the driver delta and the distributed one must agree in each mode)
     def folds() = {
       val ins = graft.streaming.Streams.ccApplyBatch(spark,
         Seq.empty[(Long, Long)].toDF("id", "component"), edges)
-      val (lab, live) = graft.streaming.Streams.ccApplyDelta(spark, ins,
-        edges.transform(Checkpoints.cut), Seq((4L, 10L)).toDF("src", "dst"),
-        Seq((2L, 3L), (3L, 2L)).toDF("src", "dst"))
-      (snap(ins), snap(lab), live.collect().map(r => (r.getLong(0),
-        r.getLong(1))).toSet)
+      val deltas = Seq(graft.streaming.Streams.ccApplyDelta _,
+          graft.streaming.Streams.ccApplyDeltaDistributed _).map { fold =>
+        val (lab, live) = fold(spark, ins, edges.transform(Checkpoints.cut),
+          Seq((4L, 10L)).toDF("src", "dst"),
+          Seq((2L, 3L), (3L, 2L)).toDF("src", "dst"))
+        (snap(lab), live.collect().map(r => (r.getLong(0), r.getLong(1)))
+          .toSeq.sorted)
+      }
+      assert(deltas(0) == deltas(1))
+      (snap(ins), deltas(0)._1, deltas(0)._2)
     }
     val bfsLocal = bfs()
     val ccLocal = cc()

@@ -1530,15 +1530,15 @@ class StreamingSpec extends SparkSpecBase {
     }
   }
 
-  test("delete-fold job gate: a small ccApplyDelta runs its CCs on the " +
-      "driver — no star-forest count, no contraction-round cut") {
+  /** The delete-fold job gate's fixture: two triangles joined by a
+    * bridge, and a far edge; the batch retracts the bridge (a split) and
+    * inserts edges that merge the far edge into the first triangle and
+    * link 6 to 40. Returns (labels, live, inserts, deletes, wanted labels).
+    */
+  private def bridgeDelta() = {
     import spark.implicits._
     def sym(pairs: (Long, Long)*): Seq[(Long, Long)] =
       pairs.flatMap(p => Seq(p, p.swap))
-    // two triangles joined by a bridge, and a far edge; the batch retracts
-    // the bridge (a split: the recolour runs a CC) and inserts edges that
-    // merge the far edge into the first triangle and link 6 to 40 (the
-    // quotient merge runs a CC)
     val tri1 = sym((1L, 2L), (2L, 3L), (1L, 3L))
     val tri2 = sym((5L, 6L), (6L, 7L), (5L, 7L))
     val bridge = sym((3L, 5L))
@@ -1548,8 +1548,37 @@ class StreamingSpec extends SparkSpecBase {
     val labels = unionFindLabels(before).toSeq.toDF("id", "component")
       .transform(graft.ops.Checkpoints.cut)
     val live = before.toDF("src", "dst").transform(graft.ops.Checkpoints.cut)
+    (labels, live, ins.toDF("src", "dst"), bridge.toDF("src", "dst"),
+      unionFindLabels(tri1 ++ tri2 ++ far ++ ins))
+  }
+
+  test("delete-fold job gate: a small ccApplyDelta runs its CCs on the " +
+      "driver — no star-forest count, no contraction-round cut") {
+    val (labels, live, ins, del, want) = bridgeDelta()
     val ((got, _), jobs) = jobSites(Streams.ccApplyDelta(spark, labels, live,
-      ins.toDF("src", "dst"), bridge.toDF("src", "dst")))
+      ins, del))
+    // the local batch is read without a job; then, one action each: the
+    // label lookup (its broadcast build and collect), the carve (the
+    // touched ids' and their vertices' broadcast builds, its collect),
+    // the label table's cut (with the component moves' broadcast) and the
+    // live table's cut (with the deletes' broadcast). No job runs in
+    // Graphs: both unions are on the driver.
+    val byAction = jobs.groupBy(_._2).toSeq.sortBy(_._1)
+      .map { case (_, js) => (js.head._1.takeWhile(_ != ':'), js.length) }
+    assert(byAction == Seq(
+      "collect at Streams.scala" -> 2,
+      "collect at Streams.scala" -> 3,
+      "localCheckpoint at Checkpoints.scala" -> 2,
+      "localCheckpoint at Checkpoints.scala" -> 2), jobs)
+    assert(!jobs.exists(_._1.contains(" at Graphs.scala")), jobs)
+    assert(got.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == want)
+  }
+
+  test("distributed delete-fold job gate: ccApplyDeltaDistributed runs its " +
+      "CCs on the driver — no star-forest count, no contraction-round cut") {
+    val (labels, live, ins, del, want) = bridgeDelta()
+    val ((got, _), jobs) = jobSites(Streams.ccApplyDeltaDistributed(spark,
+      labels, live, ins, del))
     val sites = jobs.map(_._1.takeWhile(_ != ':'))
     assert(!sites.contains("count at Graphs.scala"), jobs)
     // the recolour's CC is one edge cut and one collect; the insert
@@ -1561,8 +1590,93 @@ class StreamingSpec extends SparkSpecBase {
     val cutActions = jobs.filter(_._1.startsWith("localCheckpoint at " +
       "Checkpoints.scala:")).map(_._2).distinct
     assert(cutActions.length == 7, jobs)
-    assert(got.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
-      unionFindLabels(tri1 ++ tri2 ++ far ++ ins))
+    assert(got.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == want)
+  }
+
+  test("delta fold paths agree: driver delta == distributed delta == " +
+      "union-find, on the labels and the live edge multiset; replays agree") {
+    import spark.implicits._
+    type Edges = Seq[(Long, Long)]
+    val rnd = new scala.util.Random(71)
+    def rows(df: DataFrame) = df.collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).sorted.toSeq
+    def cut(df: DataFrame) = df.transform(graft.ops.Checkpoints.cut)
+    val paths: Seq[(String, (DataFrame, DataFrame, DataFrame, DataFrame) =>
+        (DataFrame, DataFrame))] = Seq(
+      "driver" -> (Streams.ccApplyDelta(spark, _, _, _, _)),
+      "distributed" -> (Streams.ccApplyDeltaDistributed(spark, _, _, _, _)))
+    // the live multiset after a batch: every copy of a deleted pair goes,
+    // then the non-loop inserts union in as a set
+    def liveAfter(live: Edges, ins: Edges, del: Edges): Edges = {
+      val kept = live.filterNot(del.toSet)
+      val added = ins.filter(e => e._1 != e._2)
+      (if (added.isEmpty) kept else (kept ++ added).distinct).sorted
+    }
+    def check(live: Edges, ins: Edges, del: Edges, what: String): Unit = {
+      val wantLive = liveAfter(live, ins, del)
+      val want = unionFindLabels(wantLive).toSeq.sorted
+      val labels = cut(unionFindLabels(live).toSeq.toDF("id", "component"))
+      val liveDf = cut(live.toDF("src", "dst"))
+      for ((path, fold) <- paths) {
+        val (l1, e1) = fold(labels, liveDf, ins.toDF("src", "dst"),
+          del.toDF("src", "dst"))
+        assert(rows(l1) == want, s"$what: $path labels")
+        assert(rows(e1) == wantLive, s"$what: $path live")
+        val (l2, e2) = fold(l1, e1, ins.toDF("src", "dst"),
+          del.toDF("src", "dst"))
+        assert(rows(l2) == want, s"$what: $path replay labels")
+        assert(rows(e2) == wantLive, s"$what: $path replay live")
+      }
+    }
+    val extremes = Seq(Long.MinValue, Long.MinValue + 1, Long.MaxValue, -7L)
+    def id(): Long =
+      if (rnd.nextInt(8) == 0) extremes(rnd.nextInt(extremes.length))
+      else rnd.nextInt(40).toLong - 10
+    for (trial <- 1 to 5) {
+      val base = Seq.fill(10 + rnd.nextInt(20))((id(), id()))
+      // duplicate, reversed and loop edges in the live state
+      val live = base ++ base.take(3) ++ base.take(2).map(_.swap) ++
+        Seq((base.head._1, base.head._1), (500L + trial, 500L + trial))
+      val del = rnd.shuffle(live).take(1 + rnd.nextInt(6)) ++
+        Seq((id(), id()), (base.last._2, base.last._2))
+      val ins = Seq.fill(rnd.nextInt(5))((id(), id())) ++
+        del.take(1) ++ Seq((id(), id())).map(e => (e._1, e._1))
+      check(live, ins, del, s"trial $trial")
+    }
+    def sym(pairs: (Long, Long)*): Edges = pairs.flatMap(p => Seq(p, p.swap))
+    val live = sym((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L),
+      (Long.MinValue, -5L), (-5L, Long.MaxValue)) ++ Seq((2L, 3L), (4L, 4L))
+    check(live, Seq.empty, Seq((1L, 3L), (30L, 31L), (2L, 10L)),
+      "absent deletes")
+    check(live, sym((2L, 3L)), sym((2L, 3L)), "delete and re-insert")
+    check(live, Seq.empty, sym((3L, 4L), (10L, 11L)), "edgeless vertices")
+    check(live, Seq((Long.MaxValue, 1L)), Seq((-5L, Long.MaxValue)),
+      "extreme ids")
+    check(live, Seq.empty, Seq((2L, 3L), (4L, 4L)), "delete only")
+    check(live, Seq((4L, 10L), (12L, 12L)), Seq.empty, "insert only")
+    check(live, Seq.empty, Seq.empty, "empty batch")
+    check(Seq.empty, Seq((1L, 2L)), Seq((1L, 2L), (3L, 4L)), "empty state")
+  }
+
+  test("restless insert job gate: restlessApplyBatch sizes nothing by a " +
+      "count job — the batch's size comes from its cut") {
+    import spark.implicits._
+    val edges = Seq((1L, 2L, 150L, 200L), (2L, 3L, 210L, 300L),
+      (3L, 4L, 310L, 420L), (1L, 4L, 110L, 120L))
+    val seeds = Seq((1L, 100L)).toDF("id", "arr_us")
+    val empty = Seq.empty[(Long, Long, Long, Long)]
+      .toDF("src", "dst", "dep_us", "arr_us")
+    val ((labels, _), jobs) = jobSites(Streams.restlessApplyBatch(spark,
+      seeds.withColumn("dmin", lit(1)), empty,
+      edges.toDF("src", "dst", "dep_us", "arr_us"), deltaUs = 100L,
+      maxHops = 5))
+    assert(!jobs.exists(_._1.startsWith("count at Streams.scala")), jobs)
+    val want = graft.ops.Graphs.restlessEarliestArrival(spark,
+        edges.toDF("src", "dst", "dep_us", "arr_us"), seeds, deltaUs = 100L,
+        maxHops = 5)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(labels.groupBy("id").agg(min("arr_us").as("a"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == want)
   }
 
   test("S27b deltas drawn from the live frame: inserts and deletes that " +
