@@ -470,15 +470,16 @@ object Streams {
     *  1. one collect of `labels ⋉ broadcast(batch ids)` fetches every
     *     batch id's current label; the delete endpoints' labels are the
     *     touched components;
-    *  2. [[carve]] brings back the touched components' surviving edges,
-    *     and union-find recolours them — a vertex left without edges
-    *     drops out;
+    *  2. [[carve]] brings back the touched components' vertices and then
+    *     their surviving edges, and union-find recolours them — a vertex
+    *     left without edges drops out;
     *  3. the quotient edges (each insert between its endpoints' labels
     *     after step 2; a fresh id is its own, loops dropped) are unioned
     *     with min-id roots, so the min-id invariant holds;
     *  4. the table is `labels` with the touched components dropped and
-    *     the merged untouched ones relabelled (one broadcast join, only
-    *     when some component moves), plus the recoloured ids and the
+    *     the merged untouched ones relabelled (one broadcast join of the
+    *     component moves, only when some component moves or goes), plus
+    *     the recoloured ids and the
     *     inserts' fresh ids, each with its merged label.
     */
   private def ccFoldOnDriver(s: org.apache.spark.sql.SparkSession,
@@ -534,38 +535,61 @@ object Streams {
         rIds.indices.map(j => Row(rIds(j), root(rRoots(j)))) ++
           fresh.map(v => Row(v, root(v))), "id", "component")
       // a touched component leaves the table (its ids re-enter through
-      // `added`); an untouched one that merged moves to its root
+      // `added`), so its `__new` is null; an untouched one that merged
+      // moves to its root
       val moves = touched.map(c => Row(c, null)) ++
         sortedDistinct(ids.indices.filter(untouched).map(comp(_)).toArray)
           .filter(c => root(c) != c).map(c => Row(c, root(c)))
       val kept = if (moves.isEmpty) labels
-        else relabel(labels, longFrame(s, moves.toSeq, "component", "__new"))
+        else labels.join(broadcast(longFrame(s, moves.toSeq, "__old", "__new")),
+            col("component") === col("__old"), "left")
+          .filter(col("__old").isNull || col("__new").isNotNull)
+          .select(col("id"),
+            coalesce(col("__new"), col("component")).as("component"))
       foldUnion(labels, kept, added)
     }
   }
 
   /** The live edges of the `touched` components (sorted ids) that survive
     * the deletes `del` (ends), loops dropped, as ends — or None above the
-    * driver bound. ONE bounded collect of
-    * `live ⋉ broadcast(labels ⋉ broadcast(touched))` on src (an edge
-    * never crosses components); the carve is gathered into one partition
-    * first, so the bounded collect is one job, not a scale-up series.
+    * driver bound. The vertex side is bounded first: a component of n
+    * vertices holds at least n − 1 live edges, so more than bound +
+    * |touched| vertices means more than bound edges. One bounded collect
+    * of `labels ⋉ broadcast(touched)` fetches the vertices, and one of
+    * `live ⋉ broadcast(those vertices)` on src (an edge never crosses
+    * components) the edges; only driver-built, bounded frames are
+    * broadcast.
     */
   private def carve(s: org.apache.spark.sql.SparkSession, labels: DataFrame,
       live: DataFrame, touched: Array[Long], del: Array[Long])
       : Option[Array[Long]] = {
-    val verts = labels
-      .select(col("id").cast("long").as("src"), col("component").cast("long"))
-      .join(broadcast(longFrame(s, touched.map(Row(_)).toSeq, "component")),
-        Seq("component"), "left_semi")
-      .select("src")
-    boundedEnds(live.select(col("src").cast("long"), col("dst").cast("long"))
-        .join(broadcast(verts), Seq("src"), "left_semi").repartition(1))
-      .map { ends =>
-        val gone = del.grouped(2).map(p => (p(0), p(1))).toSet
-        ends.grouped(2).filter(p => p(0) != p(1) && !gone((p(0), p(1))))
-          .flatten.toArray
-      }
+    val bound = graft.ops.Graphs.FrontierBroadcastRows
+    for {
+      verts <- boundedRows(labels
+        .select(col("id").cast("long").as("src"), col("component").cast("long"))
+        .join(broadcast(longFrame(s, touched.map(Row(_)).toSeq, "component")),
+          Seq("component"), "left_semi")
+        .select("src"), bound + touched.length)
+      edges <- boundedRows(live
+        .select(col("src").cast("long"), col("dst").cast("long"))
+        .join(broadcast(longFrame(s, verts.toSeq, "src")), Seq("src"),
+          "left_semi"), bound)
+    } yield {
+      val gone = del.grouped(2).map(p => (p(0), p(1))).toSet
+      edges.iterator.map(r => (r.getLong(0), r.getLong(1)))
+        .filter(p => p._1 != p._2 && !gone(p))
+        .flatMap(p => Iterator(p._1, p._2)).toArray
+    }
+  }
+
+  /** The rows of `df` by one job, or None above `bound` rows. Each
+    * partition stops after bound + 1 rows before the single-partition
+    * gather (`limit` then `coalesce`), so an over-bound frame is never
+    * shuffled whole, and no `limit` scale-up series of jobs runs.
+    */
+  private def boundedRows(df: DataFrame, bound: Long): Option[Array[Row]] = {
+    val rows = df.limit(bound.toInt + 1).coalesce(1).collect()
+    if (rows.length > bound) None else Some(rows)
   }
 
   /** The distributed fold of [[ccApplyBatchPlan]], for batches above the
@@ -628,13 +652,10 @@ object Streams {
   }
 
   /** `table` with each component moved along the (component, __new)
-    * `remap`, which is batch-sized and broadcast; a component whose
-    * `__new` is null leaves the table.
+    * `remap`, which is batch-sized and broadcast.
     */
   private def relabel(table: DataFrame, remap: DataFrame): DataFrame =
-    table.join(broadcast(remap.withColumn("__moved", lit(true))),
-        Seq("component"), "left")
-      .filter(col("__moved").isNull || col("__new").isNotNull)
+    table.join(broadcast(remap), Seq("component"), "left")
       .select(col("id"),
         coalesce(col("__new"), col("component")).as("component"))
 
@@ -680,18 +701,20 @@ object Streams {
     *    [[graft.ops.Graphs.FrontierBroadcastRows]] (bounded collects; a
     *    local frame runs no job) and so do the touched components' live
     *    edges: the fold runs on the driver ([[ccFoldOnDriver]]) after one
-    *    label-lookup collect and one carve collect, and each table is cut
-    *    once — 2 cuts. A local batch that deletes and inserts runs 9 jobs:
-    *    the lookup's broadcast build and its collect; the carve's two
-    *    broadcast builds (touched ids, their vertices) and its collect;
-    *    each cut with the broadcast build of its batch-sized frame (the
-    *    component moves, the deletes);
+    *    label-lookup collect and the two bounded carve collects (the
+    *    touched components' vertices, then their live edges), and each
+    *    table is cut once — 2 cuts. A local batch that deletes and inserts
+    *    runs 10 jobs: the lookup's broadcast build and its collect; each
+    *    carve collect with the broadcast build of its driver-built frame
+    *    (the touched ids, their vertices); each cut with the broadcast
+    *    build of its batch-sized frame (the component moves, the deletes);
     *  - otherwise [[ccApplyDeltaDistributed]].
     *
     * The live table is `live ⋉anti del`, then `∪ ins, distinct` only when
-    * there are inserts: it stays a multiset while the inserts are empty,
-    * every copy of a deleted pair goes, and an edge both deleted and
-    * inserted stays live. Loop deletes apply; loop inserts are dropped.
+    * there are inserts ([[nextLive]], on both paths): it stays a multiset
+    * while the inserts are empty, every copy of a deleted pair goes, and
+    * an edge both deleted and inserted stays live. Loop deletes apply;
+    * loop inserts are dropped.
     * StreamingSpec pins the bridge-delete SPLIT == from-scratch CC and
     * both paths == union-find; the s27b registry entry holds the
     * 3-insert-batch + 1-delete-batch fold to g06's oracle over the
@@ -709,17 +732,27 @@ object Streams {
       ins <- boundedEnds(nonLoopEdges(inserts))
       table <- ccFoldOnDriver(s, labels, ins, del, liveEdges)
     } yield {
-      val kept = if (del.isEmpty) liveEdges
-        else liveEdges.join(broadcast(frame(del)), Seq("src", "dst"),
-          "left_anti")
-      val live = if (ins.isEmpty) kept
-        else kept.unionByName(frame(ins)).distinct()
+      val live = nextLive(liveEdges,
+        Option.when(del.nonEmpty)(broadcast(frame(del))),
+        Option.when(ins.nonEmpty)(frame(ins)))
       (table.transform(graft.ops.Checkpoints.cut),
         if (del.isEmpty && ins.isEmpty) liveEdges
         else live.transform(graft.ops.Checkpoints.cut))
     }
     driver.getOrElse(
       ccApplyDeltaDistributed(s, labels, liveEdges, inserts, deletes))
+  }
+
+  /** The live-edge rule of a retraction, uncut: `live ⋉anti del` (every
+    * copy of a deleted pair goes), then `∪ ins, distinct` only when there
+    * are inserts — so the table stays a multiset while the inserts are
+    * empty, and an edge both deleted and inserted stays live. Both delta
+    * paths build their live table here.
+    */
+  private def nextLive(live: DataFrame, del: Option[DataFrame],
+      ins: Option[DataFrame]): DataFrame = {
+    val kept = del.fold(live)(live.join(_, Seq("src", "dst"), "left_anti"))
+    ins.fold(kept)(kept.unionByName(_).distinct())
   }
 
   /** The distributed fold of [[ccApplyDelta]], for deltas above the driver
@@ -750,7 +783,7 @@ object Streams {
       if (delRows <= graft.ops.Graphs.FrontierBroadcastRows) broadcast(df)
       else df
     val (liveDel, labels1) = if (delRows == 0L) (liveEdges, labels) else {
-      val liveD = liveEdges.join(hint(del), Seq("src", "dst"), "left_anti")
+      val liveD = nextLive(liveEdges, Some(hint(del)), None)
         .transform(graft.ops.Checkpoints.cut)
       val delVerts = del.select(col("src").as("id"))
         .unionAll(del.select(col("dst").as("id"))).distinct()
@@ -772,7 +805,7 @@ object Streams {
     val ins = inserts.select(col("src").cast("long"), col("dst").cast("long"))
       .filter(col("src") =!= col("dst"))
     val live = if (ins.isEmpty) liveDel
-      else liveDel.unionByName(ins).distinct()
+      else nextLive(liveDel, None, Some(ins))
         .transform(graft.ops.Checkpoints.cut)
     (ccApplyBatch(s, labels1, ins), live)
   }

@@ -1558,20 +1558,61 @@ class StreamingSpec extends SparkSpecBase {
     val ((got, _), jobs) = jobSites(Streams.ccApplyDelta(spark, labels, live,
       ins, del))
     // the local batch is read without a job; then, one action each: the
-    // label lookup (its broadcast build and collect), the carve (the
-    // touched ids' and their vertices' broadcast builds, its collect),
-    // the label table's cut (with the component moves' broadcast) and the
-    // live table's cut (with the deletes' broadcast). No job runs in
-    // Graphs: both unions are on the driver.
+    // label lookup (its broadcast build and collect), the carve's vertex
+    // collect (the touched ids' broadcast build, its collect) and edge
+    // collect (the vertices' broadcast build, its collect), the label
+    // table's cut (with the component moves' broadcast) and the live
+    // table's cut (with the deletes' broadcast). No job runs in Graphs:
+    // both unions are on the driver.
     val byAction = jobs.groupBy(_._2).toSeq.sortBy(_._1)
       .map { case (_, js) => (js.head._1.takeWhile(_ != ':'), js.length) }
     assert(byAction == Seq(
       "collect at Streams.scala" -> 2,
-      "collect at Streams.scala" -> 3,
+      "collect at Streams.scala" -> 2,
+      "collect at Streams.scala" -> 2,
       "localCheckpoint at Checkpoints.scala" -> 2,
       "localCheckpoint at Checkpoints.scala" -> 2), jobs)
     assert(!jobs.exists(_._1.contains(" at Graphs.scala")), jobs)
     assert(got.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == want)
+  }
+
+  test("delete-fold plan gate: the driver delta broadcasts only " +
+      "driver-built frames, and each carve collect stops before its gather") {
+    import org.apache.spark.sql.execution.{InputAdapter, LocalLimitExec,
+      LocalTableScanExec, QueryExecution, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
+      ShuffleExchangeExec}
+    val (labels, live, ins, del, _) = bridgeDelta()
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[
+      (String, SparkPlan)]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(fn: String, qe: QueryExecution,
+          durationNs: Long): Unit = plans.add(fn -> qe.executedPlan)
+      override def onFailure(fn: String, qe: QueryExecution,
+          ex: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try jobSites(Streams.ccApplyDelta(spark, labels, live, ins, del))
+    finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val all = plans.asScala.toSeq
+    def strip(p: SparkPlan): SparkPlan = p match {
+      case w: WholeStageCodegenExec => strip(w.child)
+      case a: InputAdapter => strip(a.child)
+      case other => other
+    }
+    // every broadcast reads only local frames the driver built from
+    // bounded collects: no table-sized frame is ever broadcast
+    val bcasts = all.flatMap(_._2.collect { case b: BroadcastExchangeExec => b })
+    assert(bcasts.length == 5, all.mkString("\n"))
+    assert(bcasts.forall(_.child.collectLeaves()
+      .forall(_.isInstanceOf[LocalTableScanExec])), all.mkString("\n"))
+    // the two carve collects gather into one partition only after each
+    // partition has stopped at the bound (LocalLimit under the exchange)
+    val gathers = all.filter(_._1 == "collect").flatMap(_._2.collect {
+      case e: ShuffleExchangeExec => strip(e.child) })
+    assert(gathers.length == 2, all.mkString("\n"))
+    assert(gathers.forall(_.isInstanceOf[LocalLimitExec]), all.mkString("\n"))
   }
 
   test("distributed delete-fold job gate: ccApplyDeltaDistributed runs its " +
