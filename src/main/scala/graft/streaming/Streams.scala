@@ -479,8 +479,8 @@ object Streams {
     *  4. the table is `labels` with the touched components dropped and
     *     the merged untouched ones relabelled (one broadcast join of the
     *     component moves, only when some component moves or goes), plus
-    *     the recoloured ids and the
-    *     inserts' fresh ids, each with its merged label.
+    *     the recoloured ids and the inserts' fresh ids, each with its
+    *     merged label.
     */
   private def ccFoldOnDriver(s: org.apache.spark.sql.SparkSession,
       labels: DataFrame, ins: Array[Long], del: Array[Long],
