@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.Det
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, ListState, MapState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
@@ -397,8 +397,8 @@ object Streams {
     * QUOTIENT graph: each batch edge (u, v) becomes an edge between the
     * endpoints' CURRENT components (new vertices start as their own),
     * CC runs on that super-edge list — sized by the BATCH, not the graph
-    * — and the resulting `old comp → merged comp` map (≤ 2·|batch| rows,
-    * broadcast) relabels the full table in one join. Correct because
+    * — and the resulting `old comp → merged comp` map (≤ 2·|batch| rows)
+    * relabels the full table in one pass. Correct because
     * existing labels already quotient all prior edges, so CC(labels ∪
     * batch) = CC over the quotient; the min-id label invariant survives
     * (min of merged mins = merged min). Re-applying a batch is a natural
@@ -420,12 +420,12 @@ object Streams {
     *    it): [[ccFoldOnDriver]] with no deletes builds the quotient and
     *    unions it on the driver ([[graft.ops.Graphs.unionFind]], the
     *    union-find of `connectedComponentsDF`), after ONE collect of the
-    *    endpoints' labels (`labels ⋉ broadcast(batch ids)`: the table is
-    *    only scanned). The result is `labels ∪ fresh ids` with their merged
-    *    labels, joined to a broadcast remap only when a known component
-    *    merges. A local batch's fold runs 3 jobs with the terminal cut —
-    *    the lookup's broadcast build, its collect, the table cut — and
-    *    one more (the remap's broadcast) when components merge;
+    *    endpoints' labels (`labels` filtered by the batch ids'
+    *    [[DriverSet]] probe: the table is only scanned). The result is
+    *    `labels ∪ fresh ids` with their merged labels, the known
+    *    components that merge relabelled by a [[DriverSet]] projection. A
+    *    local batch's fold runs 2 jobs with the terminal cut — the lookup
+    *    collect and the table cut — whether or not components merge;
     *  - above it: [[ccApplyBatchDistributed]].
     */
   private def ccApplyBatchPlan(s: org.apache.spark.sql.SparkSession,
@@ -463,13 +463,65 @@ object Streams {
       StructType(names.indices.map(i => StructField(names(i), LongType,
         nullable = rows.exists(_.isNullAt(i))))))
 
+  /** Probes of a set the driver holds, carried inside the plan as typed
+    * udfs over its sorted array (`java.util.Arrays.binarySearch`, O(log n)
+    * per row): each is a filter or projection over the probed scan, in the
+    * job the caller's collect or cut already runs — no broadcast exchange
+    * and no build job. The set is a reference object of the generated
+    * code, never a literal in it, so a fold of any batch reuses the
+    * classes the last one compiled (`Column.isin` inlines sets of up to
+    * 10 values). A probe of a null key is null: a filter on [[member]]
+    * drops the row, as a semi join does, and [[absent]] and
+    * [[pairAbsent]] keep it, as an anti join does.
+    */
+  private[graft] object DriverSet {
+    import java.util.Arrays.binarySearch
+
+    /** `c ∈ set` (any order, duplicates allowed). */
+    def member(set: Array[Long])(c: Column): Column = {
+      val ids = graft.ops.Graphs.sortedDistinct(set)
+      udf((v: Long) => binarySearch(ids, v) >= 0).apply(c)
+    }
+
+    /** `c ∉ set`, true for a null `c`. */
+    def absent(set: Array[Long])(c: Column): Column =
+      !coalesce(member(set)(c), lit(false))
+
+    /** `(a, b) ∉` the pairs of `ends` (ends(2i), ends(2i+1) is pair i),
+      * true when `a` or `b` is null.
+      */
+    def pairAbsent(ends: Array[Long])(a: Column, b: Column): Column = {
+      val ps = ends.grouped(2).map(p => (p(0), p(1))).toArray.distinct.sorted
+      // the distinct first ends, and where each one's run of second ends
+      // starts in `ys` (sorted within the run); starts.last == ys.length
+      val firsts = graft.ops.Graphs.sortedDistinct(ps.map(_._1))
+      val ys = ps.map(_._2)
+      val starts = (ps.indices.filter(i => i == 0 || ps(i - 1)._1 != ps(i)._1)
+        :+ ps.length).toArray
+      val hit = udf { (x: Long, y: Long) =>
+        val k = binarySearch(firsts, x)
+        k >= 0 && binarySearch(ys, starts(k), starts(k + 1), y) >= 0
+      }
+      !coalesce(hit(a, b), lit(false))
+    }
+
+    /** `c` moved to `to(j)` where `from(j) == c` (`from` sorted distinct,
+      * `to` parallel to it), else `c`; null for a null `c`.
+      */
+    def relabel(from: Array[Long], to: Array[Long])(c: Column): Column =
+      udf { (v: Long) =>
+        val j = binarySearch(from, v)
+        if (j >= 0) to(j) else v
+      }.apply(c)
+  }
+
   /** The driver fold of a batch of non-loop inserts `ins` and deletes
     * `del` (both as ends), uncut: the next label table, or None when the
     * live edges of the components the deletes touch exceed the driver
     * bound. `live` is read only when a delete touches a component.
-    *  1. one collect of `labels ⋉ broadcast(batch ids)` fetches every
-    *     batch id's current label; the delete endpoints' labels are the
-    *     touched components;
+    *  1. one collect of `labels` filtered by the batch ids (a
+    *     [[DriverSet]] probe) fetches every batch id's current label; the
+    *     delete endpoints' labels are the touched components;
     *  2. [[carve]] brings back the touched components' vertices and then
     *     their surviving edges, and union-find recolours them — a vertex
     *     left without edges drops out;
@@ -477,8 +529,8 @@ object Streams {
     *     after step 2; a fresh id is its own, loops dropped) are unioned
     *     with min-id roots, so the min-id invariant holds;
     *  4. the table is `labels` with the touched components dropped and
-    *     the merged untouched ones relabelled (one broadcast join of the
-    *     component moves, only when some component moves or goes), plus
+    *     the merged untouched ones relabelled (one [[DriverSet]] filter
+    *     and projection, only when some component moves or goes), plus
     *     the recoloured ids and the inserts' fresh ids, each with its
     *     merged label.
     */
@@ -493,8 +545,7 @@ object Streams {
     val known = new Array[Boolean](ids.length)
     if (ids.nonEmpty)
       labels.select(col("id").cast("long"), col("component").cast("long"))
-        .join(broadcast(longFrame(s, ids.map(Row(_)).toSeq, "id")), Seq("id"),
-          "left_semi")
+        .filter(DriverSet.member(ids)(col("id")))
         .collect().foreach { r =>
           val j = binarySearch(ids, r.getLong(0))
           comp(j) = r.getLong(1)
@@ -506,7 +557,7 @@ object Streams {
       known(j) && binarySearch(touched, comp(j)) < 0
     val recoloured =
       if (touched.isEmpty) Some(Array.emptyLongArray)
-      else carve(s, labels, live, touched, del)
+      else carve(labels, live, touched, del)
     recoloured.map { ends =>
       val (rIds, rRoots) = unionFind(ends)
       // a batch id's label once the deletes are applied, if it keeps one
@@ -535,17 +586,14 @@ object Streams {
         rIds.indices.map(j => Row(rIds(j), root(rRoots(j)))) ++
           fresh.map(v => Row(v, root(v))), "id", "component")
       // a touched component leaves the table (its ids re-enter through
-      // `added`), so its `__new` is null; an untouched one that merged
-      // moves to its root
-      val moves = touched.map(c => Row(c, null)) ++
-        sortedDistinct(ids.indices.filter(untouched).map(comp(_)).toArray)
-          .filter(c => root(c) != c).map(c => Row(c, root(c)))
-      val kept = if (moves.isEmpty) labels
-        else labels.join(broadcast(longFrame(s, moves.toSeq, "__old", "__new")),
-            col("component") === col("__old"), "left")
-          .filter(col("__old").isNull || col("__new").isNotNull)
-          .select(col("id"),
-            coalesce(col("__new"), col("component")).as("component"))
+      // `added`); an untouched one that merged moves to its root
+      val merged = sortedDistinct(ids.indices.filter(untouched).map(comp(_))
+        .toArray).filter(c => root(c) != c)
+      val kept = if (touched.isEmpty && merged.isEmpty) labels
+        else labels
+          .filter(DriverSet.absent(touched)(col("component").cast("long")))
+          .select(col("id"), DriverSet.relabel(merged, merged.map(root))(
+            col("component").cast("long")).as("component"))
       foldUnion(labels, kept, added)
     }
   }
@@ -555,25 +603,22 @@ object Streams {
     * driver bound. The vertex side is bounded first: a component of n
     * vertices holds at least n − 1 live edges, so more than bound +
     * |touched| vertices means more than bound edges. One bounded collect
-    * of `labels ⋉ broadcast(touched)` fetches the vertices, and one of
-    * `live ⋉ broadcast(those vertices)` on src (an edge never crosses
-    * components) the edges; only driver-built, bounded frames are
-    * broadcast.
+    * of `labels` filtered by the touched ids fetches the vertices, and one
+    * of `live` filtered by those vertices on src (an edge never crosses
+    * components) the edges: two jobs, each probe a [[DriverSet]] filter
+    * over its scan, nothing broadcast.
     */
-  private def carve(s: org.apache.spark.sql.SparkSession, labels: DataFrame,
-      live: DataFrame, touched: Array[Long], del: Array[Long])
-      : Option[Array[Long]] = {
+  private def carve(labels: DataFrame, live: DataFrame, touched: Array[Long],
+      del: Array[Long]): Option[Array[Long]] = {
     val bound = graft.ops.Graphs.FrontierBroadcastRows
     for {
       verts <- boundedRows(labels
-        .select(col("id").cast("long").as("src"), col("component").cast("long"))
-        .join(broadcast(longFrame(s, touched.map(Row(_)).toSeq, "component")),
-          Seq("component"), "left_semi")
-        .select("src"), bound + touched.length)
+        .filter(DriverSet.member(touched)(col("component").cast("long")))
+        .select(col("id").cast("long")), bound + touched.length)
       edges <- boundedRows(live
         .select(col("src").cast("long"), col("dst").cast("long"))
-        .join(broadcast(longFrame(s, verts.toSeq, "src")), Seq("src"),
-          "left_semi"), bound)
+        .filter(DriverSet.member(verts.filterNot(_.isNullAt(0))
+          .map(_.getLong(0)))(col("src"))), bound)
     } yield {
       val gone = del.grouped(2).map(p => (p(0), p(1))).toSet
       edges.iterator.map(r => (r.getLong(0), r.getLong(1)))
@@ -704,10 +749,10 @@ object Streams {
     *    label-lookup collect and the two bounded carve collects (the
     *    touched components' vertices, then their live edges), and each
     *    table is cut once — 2 cuts. A local batch that deletes and inserts
-    *    runs 10 jobs: the lookup's broadcast build and its collect; each
-    *    carve collect with the broadcast build of its driver-built frame
-    *    (the touched ids, their vertices); each cut with the broadcast
-    *    build of its batch-sized frame (the component moves, the deletes);
+    *    runs 5 jobs, one per action: the lookup, the two carve collects
+    *    and the two cuts. Every probe by a driver-held set (batch ids,
+    *    touched ids, their vertices, the component moves, the deletes) is
+    *    a [[DriverSet]] filter or projection inside those jobs;
     *  - otherwise [[ccApplyDeltaDistributed]].
     *
     * The live table is `live ⋉anti del`, then `∪ ins, distinct` only when
@@ -732,9 +777,11 @@ object Streams {
       ins <- boundedEnds(nonLoopEdges(inserts))
       table <- ccFoldOnDriver(s, labels, ins, del, liveEdges)
     } yield {
-      val live = nextLive(liveEdges,
-        Option.when(del.nonEmpty)(broadcast(frame(del))),
-        Option.when(ins.nonEmpty)(frame(ins)))
+      val live = nextLive(
+        if (del.isEmpty) liveEdges
+        else liveEdges.filter(DriverSet.pairAbsent(del)(
+          col("src").cast("long"), col("dst").cast("long"))),
+        None, Option.when(ins.nonEmpty)(frame(ins)))
       (table.transform(graft.ops.Checkpoints.cut),
         if (del.isEmpty && ins.isEmpty) liveEdges
         else live.transform(graft.ops.Checkpoints.cut))
@@ -747,7 +794,8 @@ object Streams {
     * copy of a deleted pair goes), then `∪ ins, distinct` only when there
     * are inserts — so the table stays a multiset while the inserts are
     * empty, and an edge both deleted and inserted stays live. Both delta
-    * paths build their live table here.
+    * paths build their live table here; the driver path passes `live`
+    * already filtered by its deletes' [[DriverSet.pairAbsent]] probe.
     */
   private def nextLive(live: DataFrame, del: Option[DataFrame],
       ins: Option[DataFrame]): DataFrame = {

@@ -1423,23 +1423,135 @@ class StreamingSpec extends SparkSpecBase {
       s"recall ${maintained.size}/${exact.size} below 0.9")
   }
 
-  test("quotient-CC merge job gate: a batch that merges nothing runs only " +
-      "lineage cuts — no count or isEmpty job from Streams") {
+  /** Folds `batch` into 100 components of 5 ids each (labelled by their
+    * min id) and asserts the fold's jobs: the local batch is read without
+    * a job, then exactly the lookup collect and the table cut, which
+    * relabels any merged component — no count, isEmpty or broadcast job.
+    * `moves` maps each merged component to its new label; `fresh` holds
+    * the batch's new ids with their labels.
+    */
+  private def quotientJobGate(batch: Seq[(Long, Long)], moves: Map[Long, Long],
+      fresh: Map[Long, Long]): Unit = {
     import spark.implicits._
     val labels = (0L until 500L).map(i => (i, i / 5 * 5)).toDF("id", "component")
       .transform(graft.ops.Checkpoints.cut)
-    // every edge lies inside an existing component: nothing merges, so
-    // the quotient edge list is empty and no CC runs
-    val batch = Seq((1L, 2L), (6L, 9L), (14L, 10L)).toDF("src", "dst")
-    val (out, jobs) = jobSites(Streams.ccApplyBatch(spark, labels, batch))
-    // the local batch is read without a job; then exactly the lookup's
-    // broadcast build, the lookup collect and the table cut
+    val (out, jobs) = jobSites(Streams.ccApplyBatch(spark, labels,
+      batch.toDF("src", "dst")))
     assert(jobs.map(_._1.takeWhile(_ != ':')) == Seq(
-      "collect at Streams.scala", "collect at Streams.scala",
-      "localCheckpoint at Checkpoints.scala"), jobs)
-    assert(jobs(0)._2 == jobs(1)._2 && jobs(1)._2 != jobs(2)._2, jobs)
+      "collect at Streams.scala", "localCheckpoint at Checkpoints.scala"), jobs)
+    assert(jobs(0)._2 != jobs(1)._2, jobs)
     assert(out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
-      (0L until 500L).map(i => i -> i / 5 * 5).toMap)
+      (0L until 500L).map { i => i -> moves.getOrElse(i / 5 * 5, i / 5 * 5) }
+        .toMap ++ fresh)
+  }
+
+  test("quotient-CC merge job gate: a batch that merges nothing runs only " +
+      "lineage cuts — no count or isEmpty job from Streams") {
+    // every edge lies inside an existing component: nothing merges, so
+    // the quotient edge list is empty
+    quotientJobGate(Seq((1L, 2L), (6L, 9L), (14L, 10L)), Map.empty, Map.empty)
+  }
+
+  test("quotient-CC merge job gate: a batch that merges known components " +
+      "runs the same two jobs — the relabel is a projection in the cut") {
+    // 1–6 merges components 0 and 5, 14–20 merges 10 and 20, and the
+    // fresh 600 joins 20
+    quotientJobGate(Seq((1L, 6L), (14L, 20L), (600L, 21L)),
+      Map(5L -> 0L, 20L -> 10L), Map(600L -> 10L))
+  }
+
+  test("driver-set probes: member/absent/pairAbsent/relabel == the " +
+      "broadcast semi, anti and left joins they replace, on empty, " +
+      "duplicate, extreme, negative and null keys and a 1M-id set") {
+    import spark.implicits._
+    import Streams.DriverSet
+    val extremes = Seq(Long.MinValue, Long.MinValue + 1, Long.MaxValue,
+      Long.MaxValue - 1, -1L, 0L, 1L, -42L)
+    val keys: Seq[java.lang.Long] =
+      (extremes ++ (-30L to 30L) ++ (-30L to 30L by 3)).map(Long.box) ++
+        Seq(null, null)
+    val probe = keys.toDF("k").transform(graft.ops.Checkpoints.cut)
+    def rows(df: DataFrame) = df.collect().map(r =>
+      if (r.isNullAt(0)) None else Some(r.getLong(0))).sorted.toSeq
+    def joined(set: Array[Long], how: String) = probe.join(
+      broadcast(set.toSeq.toDF("k")), Seq("k"), how)
+    val sets = Seq(
+      "empty" -> Array.emptyLongArray,
+      "duplicates" -> Array(5L, 5L, -5L, 5L, 0L, 0L),
+      "extremes" -> extremes.toArray.reverse,
+      "negatives" -> Array(-30L, -29L, -1L, -3L, -27L))
+    for ((what, set) <- sets) {
+      assert(rows(probe.filter(DriverSet.member(set)(col("k")))) ==
+        rows(joined(set, "left_semi")), s"$what: semi")
+      assert(rows(probe.filter(DriverSet.absent(set)(col("k")))) ==
+        rows(joined(set, "left_anti")), s"$what: anti")
+    }
+    // a set of 1M ids (every third id from -1.5M) probed by 200k rows that
+    // straddle its ends
+    val big = Array.tabulate(1000000)(i => 3L * i - 1500000L)
+    val bigProbe = spark.range(-1600000L, 1600000L, 16L).toDF("k")
+    val bigSet = spark.range(0L, 1000000L).select((col("id") * 3 - 1500000L)
+      .as("k"))
+    assert(bigProbe.filter(DriverSet.member(big)(col("k"))).count() ==
+      bigProbe.join(broadcast(bigSet), Seq("k"), "left_semi").count())
+    assert(bigProbe.filter(DriverSet.absent(big)(col("k"))).count() ==
+      bigProbe.join(broadcast(bigSet), Seq("k"), "left_anti").count())
+    // pairs: live rows with null ends, a repeated pair, the reversed pair,
+    // pairs sharing a first end, extreme ends
+    val pairs = Seq[(java.lang.Long, java.lang.Long)](
+      (1L, 2L), (1L, 2L), (2L, 1L), (1L, 3L), (1L, 9L), (4L, 2L),
+      (Long.MinValue, Long.MaxValue), (Long.MaxValue, Long.MinValue),
+      (-7L, -7L), (null, 2L), (1L, null), (null, null))
+    val live = pairs.toDF("src", "dst").transform(graft.ops.Checkpoints.cut)
+    def prows(df: DataFrame) = df.collect().map(r =>
+      (Option(r.getAs[java.lang.Long](0)).map(_.longValue),
+        Option(r.getAs[java.lang.Long](1)).map(_.longValue))).sorted.toSeq
+    for (del <- Seq(Array.emptyLongArray, Array(1L, 2L, 1L, 2L, 1L, 9L),
+        Array(Long.MinValue, Long.MaxValue, -7L, -7L, 2L, 1L, 5L, 5L),
+        Array(1L, 3L, 1L, 2L, 0L, 2L))) {
+      val want = live.join(broadcast(del.grouped(2).map(p => (p(0), p(1)))
+        .toSeq.toDF("src", "dst")), Seq("src", "dst"), "left_anti")
+      assert(prows(live.filter(DriverSet.pairAbsent(del)(col("src"),
+        col("dst")))) == prows(want), del.mkString(","))
+    }
+    // relabel == the left join to (__old, __new), nulls pass through
+    val from = Array(Long.MinValue, -30L, 0L, 7L, Long.MaxValue)
+    val to = Array(1L, -31L, Long.MaxValue, 7L, Long.MinValue)
+    val moved = probe.join(broadcast(from.zip(to).toSeq.toDF("__old", "__new")),
+        col("k") === col("__old"), "left")
+      .select(coalesce(col("__new"), col("k")))
+    assert(rows(probe.select(DriverSet.relabel(from, to)(col("k")))) ==
+      rows(moved))
+    assert(rows(probe.select(DriverSet.relabel(Array.emptyLongArray,
+      Array.emptyLongArray)(col("k")))) == rows(probe))
+  }
+
+  test("driver folds compile nothing new per batch: 1-, 5- and 300-edge " +
+      "batches of a warmed shape reuse its generated classes") {
+    import spark.implicits._
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME
+    var labels = (0L until 500L).map(i => (i, i / 5 * 5)).toDF("id", "component")
+      .transform(graft.ops.Checkpoints.cut)
+    var folds = 0
+    // a path of n edges over fresh ids, and one edge that merges two
+    // known components not merged before: a lookup, a component move and
+    // fresh ids every time; the lookups probe 4, 8 and 303 ids (`isin`
+    // would inline sets of up to 10 as literals)
+    def fold(n: Int): Unit = {
+      folds += 1
+      val first = 10000L * folds
+      val c = 20L * folds
+      val batch = (0 until n).map(i => (first + i, first + i + 1)) :+
+        (c + 1, c + 6)
+      labels = Streams.ccApplyBatch(spark, labels, batch.toDF("src", "dst"))
+      labels.collect()
+    }
+    fold(3); fold(3)
+    val before = compiled.getCount
+    for (n <- Seq(1, 5, 300)) fold(n)
+    assert(compiled.getCount == before,
+      s"${compiled.getCount - before} classes compiled for new batch sizes")
   }
 
   test("quotient fold paths agree: driver fold == distributed fold == " +
@@ -1557,29 +1669,28 @@ class StreamingSpec extends SparkSpecBase {
     val (labels, live, ins, del, want) = bridgeDelta()
     val ((got, _), jobs) = jobSites(Streams.ccApplyDelta(spark, labels, live,
       ins, del))
-    // the local batch is read without a job; then, one action each: the
-    // label lookup (its broadcast build and collect), the carve's vertex
-    // collect (the touched ids' broadcast build, its collect) and edge
-    // collect (the vertices' broadcast build, its collect), the label
-    // table's cut (with the component moves' broadcast) and the live
-    // table's cut (with the deletes' broadcast). No job runs in Graphs:
-    // both unions are on the driver.
+    // the local batch is read without a job; then one job per action: the
+    // label lookup, the carve's vertex collect and edge collect, the label
+    // table's cut and the live table's cut. Each probe by a driver-held
+    // set is a filter or projection inside its action's job, so nothing
+    // builds a broadcast. No job runs in Graphs: both unions are on the
+    // driver.
     val byAction = jobs.groupBy(_._2).toSeq.sortBy(_._1)
       .map { case (_, js) => (js.head._1.takeWhile(_ != ':'), js.length) }
     assert(byAction == Seq(
-      "collect at Streams.scala" -> 2,
-      "collect at Streams.scala" -> 2,
-      "collect at Streams.scala" -> 2,
-      "localCheckpoint at Checkpoints.scala" -> 2,
-      "localCheckpoint at Checkpoints.scala" -> 2), jobs)
+      "collect at Streams.scala" -> 1,
+      "collect at Streams.scala" -> 1,
+      "collect at Streams.scala" -> 1,
+      "localCheckpoint at Checkpoints.scala" -> 1,
+      "localCheckpoint at Checkpoints.scala" -> 1), jobs)
     assert(!jobs.exists(_._1.contains(" at Graphs.scala")), jobs)
     assert(got.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == want)
   }
 
-  test("delete-fold plan gate: the driver delta broadcasts only " +
-      "driver-built frames, and each carve collect stops before its gather") {
+  test("delete-fold plan gate: the driver delta broadcasts nothing, and " +
+      "each carve collect stops before its gather") {
     import org.apache.spark.sql.execution.{InputAdapter, LocalLimitExec,
-      LocalTableScanExec, QueryExecution, SparkPlan, WholeStageCodegenExec}
+      QueryExecution, SparkPlan, WholeStageCodegenExec}
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
       ShuffleExchangeExec}
     val (labels, live, ins, del, _) = bridgeDelta()
@@ -1601,12 +1712,10 @@ class StreamingSpec extends SparkSpecBase {
       case a: InputAdapter => strip(a.child)
       case other => other
     }
-    // every broadcast reads only local frames the driver built from
-    // bounded collects: no table-sized frame is ever broadcast
-    val bcasts = all.flatMap(_._2.collect { case b: BroadcastExchangeExec => b })
-    assert(bcasts.length == 5, all.mkString("\n"))
-    assert(bcasts.forall(_.child.collectLeaves()
-      .forall(_.isInstanceOf[LocalTableScanExec])), all.mkString("\n"))
+    // every probe by a driver-held set is a filter or projection over its
+    // scan: no plan builds a broadcast
+    assert(all.forall(_._2.collect { case b: BroadcastExchangeExec => b }
+      .isEmpty), all.mkString("\n"))
     // the two carve collects gather into one partition only after each
     // partition has stopped at the bound (LocalLimit under the exchange)
     val gathers = all.filter(_._1 == "collect").flatMap(_._2.collect {
