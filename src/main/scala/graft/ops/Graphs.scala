@@ -201,14 +201,7 @@ object Graphs {
       materialize: Boolean = true): DataFrame = {
     val proj = edges.select(col("src"), col("dst"))
     val e = if (materialize) proj.transform(Checkpoints.cut) else proj
-    var hop = e.filter(seedPred).select(col("dst").as("id"))
-    var acc = hop
-    for (_ <- 2 to k) {
-      hop = e.join(broadcast(hop), col("src") === col("id"), "left_semi")
-        .select(col("dst").as("id"))
-      acc = acc.unionAll(hop)
-    }
-    acc.distinct()
+    unrolledHops(e, e.filter(seedPred), k)
   }
 
   /** [[kHopIds]] from an explicit seed VERTEX set (`id` column) instead of
@@ -217,9 +210,17 @@ object Graphs {
     */
   def kHopIdsFrom(edges: DataFrame, seeds: DataFrame, k: Int): DataFrame = {
     val e = edges.select(col("src"), col("dst")).transform(Checkpoints.cut)
-    var hop = e.join(broadcast(seeds.select(col("id"))),
-        col("src") === col("id"), "left_semi")
-      .select(col("dst").as("id"))
+    unrolledHops(e, e.join(broadcast(seeds.select(col("id"))),
+      col("src") === col("id"), "left_semi"), k)
+  }
+
+  /** The k unrolled hops of [[kHopIds]]/[[kHopIdsFrom]]: `hop1` is the
+    * hop-1 slice of the edge list `e`; hops 2..k semi-join `e` against
+    * the broadcast previous hop, and one final distinct dedups them all.
+    */
+  private def unrolledHops(e: DataFrame, hop1: DataFrame, k: Int)
+      : DataFrame = {
+    var hop = hop1.select(col("dst").as("id"))
     var acc = hop
     for (_ <- 2 to k) {
       hop = e.join(broadcast(hop), col("src") === col("id"), "left_semi")
@@ -297,41 +298,59 @@ object Graphs {
     * one join of the checkpointed edge list against the broadcast
     * frontier + one anti join against the visited set, all inside
     * Tungsten — no RDD conversion, no GraphX vertex/edge replication.
-    * Early-exits when a level adds nothing.
-    *
-    * Scale notes: each level's frontier is materialized
-    * ([[Checkpoints.cutCounted]]) and its row count observed on the cut's
-    * own job, so the early-exit test costs no job and the broadcast
-    * decision is ADAPTIVE: frontiers up to `broadcastRows`
-    * ([[FrontierBroadcastRows]]) ship as broadcasts, larger ones
-    * shuffle-join (no executor-memory cliff when a hub level explodes).
-    * `visited` stays partitioned. Cost = depth × (one scan of E + one
-    * anti join on the visited set). `maxDepth = Int.MaxValue` runs to the
-    * fix point (unbounded reachability — the early exit terminates it
-    * after diameter+1 levels).
+    * The level loop is [[expandFrontier]]: frontiers up to
+    * `broadcastRows` ([[FrontierBroadcastRows]]) ship as broadcasts,
+    * larger ones shuffle-join (no executor-memory cliff when a hub level
+    * explodes), and it early-exits when a level adds nothing.
+    * Cost = depth × (one scan of E + one anti join on the visited set).
+    * `maxDepth = Int.MaxValue` runs to the fix point (unbounded
+    * reachability — the early exit terminates it after diameter+1
+    * levels).
     */
   def bfsDepthsDF(s: SparkSession, edges: DataFrame, seed: Long,
       maxDepth: Int, broadcastRows: Long = FrontierBroadcastRows): DataFrame = {
     import s.implicits._
     val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .transform(Checkpoints.cut)
-    var visited = Seq((seed, 0)).toDF("id", "dist").transform(Checkpoints.cut)
-    var frontier = visited.select("id")
-    var frontierRows = 1L
-    var depth = 0
-    while (depth < maxDepth && frontierRows > 0) {
-      depth += 1
-      val probe = if (frontierRows <= broadcastRows) broadcast(frontier)
-        else frontier
-      val (next, rows) = Checkpoints.cutCounted(
-        e.join(probe, col("src") === col("id"))
-          .select(col("dst").as("id")).distinct()
-          .join(visited, Seq("id"), "left_anti"))
+    expandFrontier(Seq((seed, 0)).toDF("id", "dist"), Seq("id"), maxDepth,
+        broadcastRows) { (probe, depth) =>
+      e.join(probe, col("src") === col("id"))
+        .select(col("dst").as("id")).distinct()
+        .withColumn("dist", lit(depth))
+    }
+  }
+
+  /** The visited-set frontier loop of the BFS-family kernels
+    * ([[bfsDepthsDF]], [[multiSourceBfs]], [[pathCountBfs]],
+    * [[restlessEarliestArrival]], [[restlessMinDepths]] and the taint
+    * closure of `Streams.restlessApplyDelta`) — a Pregel superstep as one
+    * frontier ⋈ edges dataflow whose join strategy follows the live
+    * frontier's size.
+    *
+    * `visited0` is the seed state; it is cut with its row count observed
+    * on the cut's own job ([[Checkpoints.cutCounted]]), and its rows are
+    * the first frontier. Round r = 1..`maxRounds` runs while the last
+    * frontier is non-empty: `step(probe, r)` expands the frontier —
+    * broadcast when its observed size is at most `broadcastRows` — into
+    * rows with visited's columns; the rows whose `keys` are not yet
+    * visited are the next frontier (one observed cut), and a non-empty
+    * frontier unions into `visited` (one more cut). Returns `visited`.
+    */
+  private[graft] def expandFrontier(visited0: DataFrame, keys: Seq[String],
+      maxRounds: Int, broadcastRows: Long = FrontierBroadcastRows)(
+      step: (DataFrame, Int) => DataFrame): DataFrame = {
+    var (visited, rows) = Checkpoints.cutCounted(visited0)
+    var frontier = visited
+    var round = 0
+    while (round < maxRounds && rows > 0) {
+      round += 1
+      val probe = if (rows <= broadcastRows) broadcast(frontier) else frontier
+      val (next, nextRows) = Checkpoints.cutCounted(step(probe, round)
+        .join(visited.select(keys.map(col): _*), keys, "left_anti"))
       frontier = next
-      frontierRows = rows
-      if (frontierRows > 0) visited = visited
-        .unionAll(frontier.select(col("id"), lit(depth).as("dist")))
-        .transform(Checkpoints.cut)
+      rows = nextRows
+      if (rows > 0)
+        visited = visited.unionByName(frontier).transform(Checkpoints.cut)
     }
     visited
   }
@@ -376,24 +395,22 @@ object Graphs {
     // could MASK an unreachable node — reject up front, loudly
     require(nodes.count() == total,
       "hierarchy has duplicate node ids — one row per id required")
-    var frontier = nodes
+    var (frontier, rows) = Checkpoints.cutCounted(nodes
       .join(ids.select(col("id").as("parent")), Seq("parent"), "left_anti")
-      .select(col("id"), lit(0).as("lvl"))
-      .transform(Checkpoints.cut)
+      .select(col("id"), lit(0).as("lvl")))
     var all = frontier
     var lvl = 0
-    var rows = frontier.count()
     var assigned = rows
     while (rows > 0 && lvl < maxLevels) {
       lvl += 1
       val probe = if (rows <= FrontierBroadcastRows) broadcast(frontier)
         else frontier
-      frontier = nodes
+      val (next, nextRows) = Checkpoints.cutCounted(nodes
         .join(probe.select(col("id").as("parent")), Seq("parent"),
           "left_semi")
-        .select(col("id"), lit(lvl).as("lvl"))
-        .transform(Checkpoints.cut)
-      rows = frontier.count()
+        .select(col("id"), lit(lvl).as("lvl")))
+      frontier = next
+      rows = nextRows
       assigned += rows
       if (rows > 0) all = all.unionAll(frontier)
     }
@@ -514,39 +531,25 @@ object Graphs {
     * closeness/harmonic centrality sampling — k seeds cost ONE pass of
     * depth × (scan E + anti join), not k traversals; the per-level work
     * is the union of the per-seed frontiers, which share each edge scan.
-    * The frontier probe is ADAPTIVE like [[bfsDepthsDF]]'s: each level's
-    * (seed, id) frontier is materialized for the early-exit test anyway,
-    * so its size is known for free — levels up to `broadcastRows` ship as
-    * broadcasts, larger ones (multi-seed frontiers are k× bigger, so this
-    * flips earlier than single-source BFS) shuffle-join. Returns
-    * (seed, id, dist), dist <= maxDepth.
+    * The level loop is [[expandFrontier]], as for [[bfsDepthsDF]]:
+    * levels up to `broadcastRows` ship as broadcasts, larger ones
+    * (multi-seed frontiers are k× bigger, so this flips earlier than
+    * single-source BFS) shuffle-join. Returns (seed, id, dist),
+    * dist <= maxDepth.
     */
   def multiSourceBfs(s: SparkSession, edges: DataFrame, seeds: DataFrame,
       maxDepth: Int, broadcastRows: Long = FrontierBroadcastRows): DataFrame = {
     val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .distinct().transform(Checkpoints.cut)
-    var visited = seeds.select(col("id").cast("long").as("seed"))
+    val visited0 = seeds.select(col("id").cast("long").as("seed"))
       .distinct() // duplicate seed ids would inflate every dist-0 profile
       .select(col("seed"), col("seed").as("id"), lit(0).as("dist"))
-      .transform(Checkpoints.cut)
-    var frontier = visited.select("seed", "id")
-    var frontierRows = frontier.count()
-    var depth = 0
-    while (depth < maxDepth && frontierRows > 0) {
-      depth += 1
-      val probe = if (frontierRows <= broadcastRows) broadcast(frontier)
-        else frontier
-      frontier = probe.join(e, col("id") === col("src"))
-        .select(col("seed"), col("dst").as("id")).distinct()
-        .join(visited.select("seed", "id"), Seq("seed", "id"), "left_anti")
-        .transform(Checkpoints.cut)
-      frontierRows = frontier.count()
-      if (frontierRows > 0) visited = visited
-        .unionAll(frontier.select(col("seed"), col("id"),
-          lit(depth).as("dist")))
-        .transform(Checkpoints.cut)
+    expandFrontier(visited0, Seq("seed", "id"), maxDepth, broadcastRows) {
+      (probe, depth) =>
+        probe.join(e, col("id") === col("src"))
+          .select(col("seed"), col("dst").as("id")).distinct()
+          .withColumn("dist", lit(depth))
     }
-    visited
   }
 
   /** G20 — multi-source BFS carrying SHORTEST-PATH COUNTS (the Brandes
@@ -573,31 +576,17 @@ object Graphs {
       maxDepth: Int, broadcastRows: Long = FrontierBroadcastRows): DataFrame = {
     val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .distinct().transform(Checkpoints.cut)
-    var visited = seeds.select(col("id").cast("long").as("seed"))
+    val visited0 = seeds.select(col("id").cast("long").as("seed"))
       .distinct()
       .select(col("seed"), col("seed").as("id"), lit(0).as("dist"),
         lit(1L).as("paths"))
-      .transform(Checkpoints.cut)
-    var frontier = visited.select("seed", "id", "paths")
-    var frontierRows = frontier.count()
-    var depth = 0
-    while (depth < maxDepth && frontierRows > 0) {
-      depth += 1
-      val probe = if (frontierRows <= broadcastRows) broadcast(frontier)
-        else frontier
-      frontier = probe.join(e, col("id") === col("src"))
-        .groupBy(col("seed"), col("dst"))
-        .agg(sum("paths").as("paths"))
-        .withColumnRenamed("dst", "id")
-        .join(visited.select("seed", "id"), Seq("seed", "id"), "left_anti")
-        .transform(Checkpoints.cut)
-      frontierRows = frontier.count()
-      if (frontierRows > 0) visited = visited
-        .unionAll(frontier.select(col("seed"), col("id"),
-          lit(depth).as("dist"), col("paths")))
-        .transform(Checkpoints.cut)
+    expandFrontier(visited0, Seq("seed", "id"), maxDepth, broadcastRows) {
+      (probe, depth) =>
+        probe.join(e, col("id") === col("src"))
+          .groupBy(col("seed"), col("dst").as("id"))
+          .agg(sum("paths").as("paths"))
+          .withColumn("dist", lit(depth))
     }
-    visited
   }
 
   /** G21 — Brandes dependency accumulation: the backward sweep that turns
@@ -650,13 +639,14 @@ object Graphs {
       .select(col("seed"), col("src"), col("dst"), col("d_w"),
         (col("p_v").cast("double") / col("p_w")).as("ratio"))
       .transform(Checkpoints.cut)
-    // per-level reverse sweep; deltaLevel holds level-d state only
-    var deltaLevel = bfs.filter(col("dist") === maxLevel)
-      .select(col("seed"), col("id"), lit(0.0).as("delta"))
+    // per-level reverse sweep; deltaLevel holds level-d state only, cut
+    // with its size observed for the probe decision
+    var (deltaLevel, rows) = Checkpoints.cutCounted(
+      bfs.filter(col("dist") === maxLevel)
+        .select(col("seed"), col("id"), lit(0.0).as("delta")))
     var deltaAll = deltaLevel
     var level = maxLevel
     while (level > 0) {
-      val rows = deltaLevel.count() // materialized for the probe decision
       val probe = if (rows <= broadcastRows) broadcast(deltaLevel)
         else deltaLevel
       val contrib = dag.filter(col("d_w") === level)
@@ -666,12 +656,14 @@ object Graphs {
         .agg(sum(col("ratio") * (lit(1.0) + col("d_delta"))).as("delta"))
         .select(col("seed"), col("src").as("id"), col("delta"))
       // vertices at level-1 with no DAG successors get δ = 0
-      deltaLevel = bfs.filter(col("dist") === level - 1)
-        .select(col("seed"), col("id"))
-        .join(contrib, Seq("seed", "id"), "left_outer")
-        .select(col("seed"), col("id"),
-          coalesce(col("delta"), lit(0.0)).as("delta"))
-        .transform(Checkpoints.cut)
+      val (next, nextRows) = Checkpoints.cutCounted(
+        bfs.filter(col("dist") === level - 1)
+          .select(col("seed"), col("id"))
+          .join(contrib, Seq("seed", "id"), "left_outer")
+          .select(col("seed"), col("id"),
+            coalesce(col("delta"), lit(0.0)).as("delta")))
+      deltaLevel = next
+      rows = nextRows
       deltaAll = deltaAll.unionAll(deltaLevel).transform(Checkpoints.cut)
       level -= 1
     }
@@ -2518,35 +2510,29 @@ object Graphs {
     val e = edges.select(col("src").cast("long"), col("dst").cast("long"),
         col("dep_us").cast("long"), col("arr_us").cast("long"))
       .transform(Checkpoints.cut)
-    var (labels, rows) = Checkpoints.cutCounted(seeds.select(
-      col("id").cast("long"), col("arr_us").cast("long")).distinct())
-    var frontier = labels
-    var hop = 1
-    while (hop < maxHops && rows > 0) {
-      hop += 1
-      // adaptive frontier broadcast (the bfsDepthsDF discipline): the
-      // checkpointed frontier carries no stats, so without the explicit
-      // hint Catalyst would plan a shuffle join and move the FULL edge
-      // list every round; small frontiers — the normal case for a
-      // depth-bounded temporal expansion — ship as broadcasts instead.
-      val probe = if (rows <= FrontierBroadcastRows) broadcast(frontier)
-        else frontier
-      val expanded = probe
-        .select(col("id").as("f_id"), col("arr_us").as("f_arr"))
-        .join(e, col("f_id") === col("src"))
-        .filter(col("dep_us") >= col("f_arr") &&
-          col("dep_us") <= col("f_arr") + deltaUs)
-        .select(col("dst").as("id"), col("arr_us"))
-        .distinct()
-      val (next, nextRows) = Checkpoints.cutCounted(
-        expanded.join(labels, Seq("id", "arr_us"), "left_anti"))
-      frontier = next
-      rows = nextRows
-      if (rows > 0)
-        labels = labels.unionAll(frontier).transform(Checkpoints.cut)
-    }
-    labels.groupBy("id").agg(min(col("arr_us")).as("arrival_us"))
+    // the seed labels are walks of one hop, so maxHops − 1 rounds remain.
+    // The adaptive frontier broadcast of [[expandFrontier]] matters here:
+    // the checkpointed frontier carries no stats, so without the explicit
+    // hint Catalyst would plan a shuffle join and move the FULL edge list
+    // every round; small frontiers — the normal case for a depth-bounded
+    // temporal expansion — ship as broadcasts instead.
+    expandFrontier(seeds.select(col("id").cast("long"),
+        col("arr_us").cast("long")).distinct(), Seq("id", "arr_us"),
+        maxHops - 1)((probe, _) => restlessStep(probe, e, deltaUs))
+      .groupBy("id").agg(min(col("arr_us")).as("arrival_us"))
   }
+
+  /** One restless hop of the label frontier `f` (id, arr_us, …) through
+    * the δ-usable edges of `e`: the distinct (id, arr_us) labels reached.
+    */
+  private[graft] def restlessStep(f: DataFrame, e: DataFrame, deltaUs: Long)
+      : DataFrame =
+    f.select(col("id").as("f_id"), col("arr_us").as("f_arr"))
+      .join(e, col("f_id") === col("src"))
+      .filter(col("dep_us") >= col("f_arr") &&
+        col("dep_us") <= col("f_arr") + deltaUs)
+      .select(col("dst").as("id"), col("arr_us"))
+      .distinct()
 
   /** G49 — minimal RESTLESS WALK DEPTH per reached node: the hop-count
     * twin of [[restlessEarliestArrival]] (same label DP, same
@@ -2564,34 +2550,12 @@ object Graphs {
     val e = edges.select(col("src").cast("long"), col("dst").cast("long"),
         col("dep_us").cast("long"), col("arr_us").cast("long"))
       .transform(Checkpoints.cut)
-    var labels = seeds.select(col("id").cast("long"),
-        col("arr_us").cast("long")).distinct()
-      .withColumn("dist", lit(1))
-      .transform(Checkpoints.cut)
-    var frontier = labels
-    var hop = 1
-    var rows = frontier.count()
-    while (hop < maxHops && rows > 0) {
-      hop += 1
-      val probe = if (rows <= FrontierBroadcastRows) broadcast(frontier)
-        else frontier
-      val expanded = probe
-        .select(col("id").as("f_id"), col("arr_us").as("f_arr"))
-        .join(e, col("f_id") === col("src"))
-        .filter(col("dep_us") >= col("f_arr") &&
-          col("dep_us") <= col("f_arr") + deltaUs)
-        .select(col("dst").as("id"), col("arr_us"))
-        .distinct()
-        .withColumn("dist", lit(hop))
-      frontier = expanded
-        .join(labels.select("id", "arr_us"), Seq("id", "arr_us"),
-          "left_anti")
-        .transform(Checkpoints.cut)
-      rows = frontier.count()
-      if (rows > 0)
-        labels = labels.unionAll(frontier).transform(Checkpoints.cut)
-    }
-    labels.groupBy("id").agg(min(col("dist")).as("dist"))
+    // round r discovers the labels at walk depth r + 1
+    expandFrontier(seeds.select(col("id").cast("long"),
+        col("arr_us").cast("long")).distinct().withColumn("dist", lit(1)),
+        Seq("id", "arr_us"), maxHops - 1) { (probe, r) =>
+      restlessStep(probe, e, deltaUs).withColumn("dist", lit(r + 1))
+    }.groupBy("id").agg(min(col("dist")).as("dist"))
   }
 
   /** G46 — restless WALK COUNTING: how many distinct δ-restless temporal
@@ -2625,33 +2589,31 @@ object Graphs {
     * accreted — a broadcast-threshold or δ-boundary fix must land once):
     * level 1 = the seed labels' (id, arr_us, n) multiplicities; each
     * next level steps every label through the δ-usable edges with the
-    * adaptive broadcast hint (see [[restlessEarliestArrival]]) and
+    * adaptive broadcast hint (see [[expandFrontier]]) and
     * re-aggregates counts per (dst, arr). Returns the per-depth level
     * tables, 1-indexed, stopping early when a level empties. `e` must
     * already be the projected + checkpoint-cut 4-column edge frame.
     */
   private def restlessForwardLevels(e: DataFrame, seeds: DataFrame,
       deltaUs: Long, maxHops: Int): Seq[(Int, DataFrame)] = {
-    var level = seeds.select(col("id").cast("long"),
-        col("arr_us").cast("long"))
-      .groupBy("id", "arr_us").agg(count(lit(1)).as("n"))
-      .transform(Checkpoints.cut)
+    var (level, rows) = Checkpoints.cutCounted(seeds.select(
+        col("id").cast("long"), col("arr_us").cast("long"))
+      .groupBy("id", "arr_us").agg(count(lit(1)).as("n")))
     val fwd = scala.collection.mutable.ArrayBuffer((1, level))
     var hop = 1
-    var rows = level.count()
     while (hop < maxHops && rows > 0) {
       hop += 1
       val probe = if (rows <= FrontierBroadcastRows) broadcast(level)
         else level
-      level = probe
+      val (next, nextRows) = Checkpoints.cutCounted(probe
         .select(col("id").as("f_id"), col("arr_us").as("f_arr"), col("n"))
         .join(e, col("f_id") === col("src"))
         .filter(col("dep_us") >= col("f_arr") &&
           col("dep_us") <= col("f_arr") + deltaUs)
         .groupBy(col("dst").as("id"), col("arr_us"))
-        .agg(sum("n").as("n"))
-        .transform(Checkpoints.cut)
-      rows = level.count()
+        .agg(sum("n").as("n")))
+      level = next
+      rows = nextRows
       if (rows > 0) fwd += ((hop, level))
     }
     fwd.toSeq
@@ -2689,9 +2651,8 @@ object Graphs {
     val fwd = restlessForwardLevels(e, seeds, deltaUs, maxHops)
     // reachable label domain (id, arr_us) with its continuation counts
     // cont_r, built upward from cont_0 = 1 (the empty continuation)
-    val labels = fwd.map(_._2.select("id", "arr_us"))
-      .reduce(_.unionAll(_)).distinct().transform(Checkpoints.cut)
-    val labelRows = labels.count()
+    val (labels, labelRows) = Checkpoints.cutCounted(
+      fwd.map(_._2.select("id", "arr_us")).reduce(_.unionAll(_)).distinct())
     val labelProbe = if (labelRows <= FrontierBroadcastRows)
       broadcast(labels) else labels
     var cont = labels.withColumn("c", lit(1L)).transform(Checkpoints.cut)

@@ -822,11 +822,11 @@ object Streams {
     val (del, delRows) = graft.ops.Checkpoints.cutCounted(
       deletes.select(col("src").cast("long"), col("dst").cast("long"))
         .distinct())
-    // adaptive hint (the bfsDepthsDF discipline): the delete batch and
-    // everything derived from it (endpoints, touched component ids) are
-    // batch-sized — broadcast them against the accumulated tables when
-    // small instead of letting the stats-less checkpointed frames fall
-    // back to shuffle joins of the full state.
+    // adaptive hint (the `Graphs.expandFrontier` rule): the delete batch
+    // and everything derived from it (endpoints, touched component ids)
+    // are batch-sized — broadcast them against the accumulated tables
+    // when small instead of letting the stats-less checkpointed frames
+    // fall back to shuffle joins of the full state.
     def hint(df: DataFrame): DataFrame =
       if (delRows <= graft.ops.Graphs.FrontierBroadcastRows) broadcast(df)
       else df
@@ -1571,10 +1571,10 @@ object Streams {
   /** One restless expansion step over the (dmin min-lattice) labels:
     * every under-budget label stepped through `through`'s δ-usable
     * edges, min-dmin per produced (id, arr_us). Adaptive broadcast (the
-    * bfsDepthsDF discipline): checkpointed frames carry no stats, so
-    * hint the smaller join side explicitly — batch-sized edge sets and
-    * cascade slices are small next to the accumulated label table /
-    * live edge list.
+    * [[graft.ops.Graphs.expandFrontier]] rule): checkpointed frames carry
+    * no stats, so hint the smaller join side explicitly — batch-sized
+    * edge sets and cascade slices are small next to the accumulated
+    * label table / live edge list.
     */
   private def restlessExpand(from: DataFrame, fromRows: Long,
       through: DataFrame, throughRows: Long, deltaUs: Long,
@@ -1678,7 +1678,6 @@ object Streams {
     if (delRows == 0L) {
       restlessApplyBatch(s, labels, liveEdges, insEdges, deltaUs, maxHops)
     } else {
-      val bcastRows = graft.ops.Graphs.FrontierBroadcastRows
       val eNew = insEdges.select(col("src").cast("long"),
           col("dst").cast("long"), col("dep_us").cast("long"),
           col("arr_us").cast("long")).distinct()
@@ -1694,31 +1693,14 @@ object Streams {
         .unionByName(eNew).distinct())
       // 1. taint: roots at the deleted edges' (dst, arr) labels, then
       // the forward closure over existing labels through live edges
-      val (roots, rootRows) = graft.ops.Checkpoints.cutCounted(labels
+      val roots = labels
         .join(dels.select(col("dst").as("id"), col("arr_us")).distinct(),
           Seq("id", "arr_us"), "left_semi")
-        .select("id", "arr_us"))
-      var taint = roots
-      var frontier = roots
-      var frontierRows = rootRows
-      var round = 0
-      while (frontierRows > 0 && round < maxHops) {
-        round += 1
-        val f0 = frontier.select(col("id").as("f_id"),
-          col("arr_us").as("f_arr"))
-        val f = if (frontierRows <= bcastRows) broadcast(f0) else f0
-        val stepped = f.join(live, col("f_id") === col("src"))
-          .filter(col("dep_us") >= col("f_arr") &&
-            col("dep_us") <= col("f_arr") + deltaUs)
-          .select(col("dst").as("id"), col("arr_us")).distinct()
-        val (next, nextRows) = graft.ops.Checkpoints.cutCounted(stepped
+        .select("id", "arr_us")
+      val taint = graft.ops.Graphs.expandFrontier(roots, Seq("id", "arr_us"),
+          maxHops) { (probe, _) =>
+        graft.ops.Graphs.restlessStep(probe, live, deltaUs)
           .join(labels, Seq("id", "arr_us"), "left_semi")
-          .join(taint, Seq("id", "arr_us"), "left_anti"))
-        frontier = next
-        frontierRows = nextRows
-        if (frontierRows > 0)
-          taint = taint.unionByName(frontier)
-            .transform(graft.ops.Checkpoints.cut)
       }
       // 2. drop tainted, restore the fixed seeds
       val seedLab = seeds.select(col("id").cast("long"),

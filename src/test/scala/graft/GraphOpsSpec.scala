@@ -176,20 +176,39 @@ class GraphOpsSpec extends SparkSpecBase {
       edges, target.getLong(0), target.getLong(1), maxHops = 8)))
   }
 
+  /** The frontier job gates' fixture: the chain 1→2→3→4→5, every hop
+    * usable.
+    */
+  private def chainEdges: org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    (1L to 4L).map(i => (i, i + 1, 10 * i, 10 * i + 5))
+      .toDF("src", "dst", "avail_us", "arrive_us")
+  }
+
+  /** The call site of every action `run` starts (one per SQL execution),
+    * the test's own collect left out.
+    */
+  private def actionSites[T](run: => T): (T, Seq[String]) = {
+    val (out, jobs) = jobSites(run)
+    (out, jobs.groupBy(_._2).values.map(_.head._1).toSeq
+      .filterNot(_.startsWith("collect at GraphOpsSpec")))
+  }
+
+  /** Runs `run`, asserts every action it started is a cut, and returns
+    * its result with the number of cuts.
+    */
+  private def actions(run: => Array[org.apache.spark.sql.Row])
+      : (Array[org.apache.spark.sql.Row], Int) = {
+    val (out, sites) = actionSites(run)
+    assert(sites.forall(_.startsWith("localCheckpoint at Checkpoints.scala:")),
+      sites)
+    (out, sites.length)
+  }
+
   test("frontier job gate: the temporal paths, fastestJourney and " +
       "bfsDepthsDF run only cut jobs — no count at Graphs.scala") {
     import spark.implicits._
-    // the chain 1→2→3→4→5, every hop usable
-    val edges = (1L to 4L).map(i => (i, i + 1, 10 * i, 10 * i + 5))
-      .toDF("src", "dst", "avail_us", "arrive_us")
-    def actions(run: => Array[org.apache.spark.sql.Row]) = {
-      val (out, jobs) = jobSites(run)
-      val sites = jobs.groupBy(_._2).values.map(_.head._1).toSeq
-        .filterNot(_.startsWith("collect at GraphOpsSpec"))
-      assert(sites.forall(_.startsWith("localCheckpoint at Checkpoints.scala:")),
-        jobs)
-      (out, sites.length)
-    }
+    val edges = chainEdges
     // the edge cut, then one cut per hop: four hops improve, the fifth
     // finds nothing and ends the loop
     val (ea, eaCuts) = actions(Graphs.earliestArrival(spark, edges, 1L, 0L,
@@ -222,6 +241,46 @@ class GraphOpsSpec extends SparkSpecBase {
       Seq((1L, 0L)).toDF("id", "arr_us"), deltaUs = 100L, maxHops = 8)
       .collect())
     assert(raCuts == 2 + 2 * 4 + 1 && ra.length == 5, ra.toSeq)
+  }
+
+  test("frontier job gate: the visited-set BFS family, the restless " +
+      "counts, forestLevels and Brandes size frontiers on their cuts — " +
+      "no frontier count at Graphs.scala") {
+    import spark.implicits._
+    val edges = chainEdges.select("src", "dst")
+    val temporal = chainEdges.select($"src", $"dst",
+      $"avail_us".as("dep_us"), $"arrive_us".as("arr_us"))
+    val seeds = Seq(1L).toDF("id")
+    val labelSeeds = Seq((1L, 0L)).toDF("id", "arr_us")
+    // the edge and seed cuts, then a frontier cut and a visited cut per
+    // improving level; the fifth level's empty frontier ends the loop
+    val (ms, msCuts) = actions(Graphs.multiSourceBfs(spark, edges, seeds,
+      maxDepth = 8).collect())
+    assert(msCuts == 2 + 2 * 4 + 1 && ms.length == 5, ms.toSeq)
+    val (pc, pcCuts) = actions(Graphs.pathCountBfs(spark, edges, seeds,
+      maxDepth = 8).collect())
+    assert(pcCuts == 2 + 2 * 4 + 1 && pc.length == 5, pc.toSeq)
+    val (md, mdCuts) = actions(Graphs.restlessMinDepths(spark, temporal,
+      labelSeeds, deltaUs = 100L, maxHops = 8).collect())
+    assert(mdCuts == 2 + 2 * 4 + 1 && md.length == 5, md.toSeq)
+    // the edge cut, the seed level and one cut per hop up to the empty one
+    val (wc, wcCuts) = actions(Graphs.restlessWalkCounts(spark, temporal,
+      labelSeeds, deltaUs = 100L, maxHops = 8).collect())
+    assert(wcCuts == 2 + 4 + 1 && wc.length == 5, wc.toSeq)
+    val (vc, _) = actions(Graphs.restlessVisitCounts(spark, temporal,
+      labelSeeds, deltaUs = 100L, maxHops = 8).collect())
+    assert(vc.length == 5, vc.toSeq)
+    def counts(sites: Seq[String]) =
+      sites.count(_.startsWith("count at Graphs.scala"))
+    // the level DPs' head and forestLevels' two input checks (distinct
+    // ids, one row per id) are the only non-cut actions
+    val tree = Seq((1L, 0L, 2L), (2L, 1L, 3L), (3L, 2L, 1L), (4L, 1L, 5L),
+      (5L, 4L, 1L)).toDF("id", "parent", "qty")
+    val (bom, bomSites) = actionSites(Graphs.bomRollup(spark, tree).collect())
+    assert(counts(bomSites) == 2 && bom.length == 5, bomSites)
+    val (br, brSites) = actionSites(Graphs.brandesDependencies(spark, edges,
+      seeds, maxDepth = 8).collect())
+    assert(counts(brSites) == 0 && br.length == 5, brSites)
   }
 
   test("src/main has no GraphX: graph kernels are DataFrame frontiers, " +
